@@ -107,24 +107,43 @@ def _pss_bytes(pid: int) -> int:
     return 0
 
 
+def _comm(pid: int) -> str:
+    try:
+        with open(f"/proc/{pid}/comm") as f:
+            return f.read().strip()
+    except OSError:
+        return "?"
+
+
 class RssSampler:
     """Peak resident memory of this process tree (Python driver, JVM,
     Python workers), sampled from /proc on a background thread.  Each
     process counts its proportional share (Pss) of the pages it
     shares, so the forked Python workers' common pages count once and
     the sum is the tree's resident size.  ``exclude`` drops processes
-    that are not the system under test (the trickle feeder)."""
+    that are not the system under test (the trickle feeder).
+    ``peak_parts`` splits the peak by process name: MiB and count."""
 
     def __init__(self, interval_s: float = 0.05):
         self.interval_s = interval_s
         self.exclude: set[int] = set()
         self.peak = 0
+        self.peak_parts: dict[str, list] = {}
         self._stop = threading.Event()
         self._thread: threading.Thread | None = None
 
     def _sample(self) -> None:
         pids = [p for p in process_tree(os.getpid()) if p not in self.exclude]
-        self.peak = max(self.peak, sum(_pss_bytes(p) for p in pids))
+        pss = {p: _pss_bytes(p) for p in pids}
+        total = sum(pss.values())
+        if total > self.peak:
+            self.peak = total
+            parts: dict[str, list] = {}
+            for p, b in pss.items():
+                part = parts.setdefault(_comm(p), [0.0, 0])
+                part[0] += b / 2**20
+                part[1] += 1
+            self.peak_parts = {k: [round(mb, 1), n] for k, (mb, n) in parts.items()}
 
     def _loop(self) -> None:
         while not self._stop.wait(self.interval_s):
