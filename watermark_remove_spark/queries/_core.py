@@ -71,37 +71,13 @@ def _t_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 DEC = "decimal(18,2)"
 
 
-# re-exported so the block-module cascade (and the package
-# __init__) can star-import the full namespace, underscore
-# helpers included
-__all__ = [
-    'Callable',
-    'DataFrame',
-    'SparkSession',
-    'Window',
-    'F',
-    'duck_hist_bin',
-    'HEX_BIT_CHARS',
-    'duck_md5_i64',
-    'md5_i64_expr',
-    'plane_signs',
-    'doc_shingles_expr',
-    'kgram_windows_expr',
-    'tokens_expr',
-    'LANG_MARKERS',
-    'lang_id_expr',
-    'token_count_expr',
-    'cosine_expr',
-    'minhash_near_dupes',
-    'simhash_near_dupes',
-    'anti_join',
-    'broadcast_join',
-    'semi_join',
-    'extract_media_features',
-    'lsh_topk',
-    'salted_window_domain_agg',
-    'lang_domain_rollup',
-    '_t',
-    '_t_wide',
-    'DEC',
-]
+def _star_exports(namespace: dict) -> list[str]:
+    """A catalog module's ``__all__``: the names its star import
+    brought in (the previous module's ``__all__``), then every name it
+    binds itself, in binding order.  Underscore helpers are included
+    so the block cascade and the package ``__init__`` re-export the
+    whole namespace."""
+    return [n for n in namespace if not n.startswith("__") and n != "annotations"]
+
+
+__all__ = _star_exports(globals())

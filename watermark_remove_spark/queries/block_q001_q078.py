@@ -4,7 +4,6 @@ names and behavior identical to the original queries.py."""
 from __future__ import annotations
 
 from ._core import *  # noqa: F401,F403
-from ._core import __all__ as _prev_all
 
 
 # ---------------------------------------------------------------- relational
@@ -4060,198 +4059,4 @@ def q78_drift_monitor(spark, sf_dir):
     )
 
 
-__all__ = _prev_all + [
-    'q01_pricing_summary',
-    'ORACLE_Q01',
-    'q02_segment_sales',
-    'ORACLE_Q02',
-    'q03_nations_with_buyers',
-    'ORACLE_Q03',
-    'q04_customers_without_orders',
-    'ORACLE_Q04',
-    'q05_top_orders_per_priority',
-    'ORACLE_Q05',
-    'q06_order_rollup',
-    'ORACLE_Q06',
-    'q30_order_cube',
-    'ORACLE_Q30',
-    'q07_part_setops',
-    'ORACLE_Q07',
-    'q08_top_lineitems',
-    'ORACLE_Q08',
-    'q09_tumbling_event_windows',
-    'ORACLE_Q09',
-    'q10_sliding_event_windows',
-    'ORACLE_Q10',
-    'q11_user_sessions',
-    'ORACLE_Q11',
-    'q12_event_dedup',
-    'ORACLE_Q12',
-    '_DUCK_SHINGLES',
-    'q13_frequent_shingles',
-    'ORACLE_Q13',
-    'q14_boiler_ratio',
-    'ORACLE_Q14',
-    'q15_doc_fingerprints',
-    'ORACLE_Q15',
-    'q16_jaccard_pairs',
-    'ORACLE_Q16',
-    'q17_lang_id',
-    '_duck_hits',
-    'ORACLE_Q17',
-    'q18_token_stats',
-    'ORACLE_Q18',
-    'q19_quality_scores',
-    'ORACLE_Q19',
-    'q20_cosine_topk',
-    'ORACLE_Q20',
-    'q21_embedding_norm_buckets',
-    'ORACLE_Q21',
-    'q22_minhash_near_dupes',
-    '_duck_minhash_oracle',
-    'ORACLE_Q22',
-    'q23_simhash_near_dupes',
-    '_duck_simhash_oracle',
-    'ORACLE_Q23',
-    'q24_lsh_topk',
-    '_duck_lsh_bucket',
-    '_duck_lsh_oracle',
-    'ORACLE_Q24',
-    'q25_media_features',
-    '_duck_fake_feature',
-    'ORACLE_Q25',
-    'q26_salted_domain_windows',
-    'ORACLE_Q26',
-    'SENTINEL_DOMAIN',
-    '_derived_pages_pandas',
-    '_sentinel_pages',
-    '_q_tmpdir',
-    '_split_batches',
-    '_derived_stream_fixture',
-    '_late_stream_fixture',
-    '_drain',
-    'q27_streaming_clean_windows',
-    'q28_stateful_sessions',
-    'q29_streaming_asof_join',
-    'q31_ivf_topk',
-    '_DUCK_IVF_DIST',
-    'ORACLE_Q31',
-    'q32_rolling_fingerprint',
-    '_duck_kgrams',
-    'ORACLE_Q32',
-    'q33_bpe_tokens',
-    'ORACLE_Q33',
-    'q34_embedding_near_dupes',
-    '_duck_embedding_near_dupes',
-    'ORACLE_Q34',
-    '_DUCK_DERIVED_PAGES',
-    'ORACLE_Q27',
-    'ORACLE_Q28',
-    'ORACLE_Q29',
-    'q35_corpus_prep',
-    'ORACLE_Q35',
-    'q36_value_percentiles',
-    'ORACLE_Q36',
-    'q37_json_props',
-    'ORACLE_Q37',
-    'q38_status_pivot',
-    'ORACLE_Q38',
-    'q39_scd2_templates',
-    'ORACLE_Q39',
-    'q40_late_data_windows',
-    'ORACLE_Q40',
-    'q41_scd2_cdc_deletes',
-    'ORACLE_Q41',
-    'q42_rate_limited_drain',
-    'ORACLE_Q42',
-    'q43_range_join_incidents',
-    'ORACLE_Q43',
-    'q44_streaming_sliding_windows',
-    'ORACLE_Q44',
-    'DECON_K',
-    'DECON_MOD',
-    '_duck_doc_kgrams',
-    'q45_benchmark_decontamination',
-    'ORACLE_Q45',
-    'q46_repetition_filters',
-    'ORACLE_Q46',
-    'q47_stratified_sample',
-    'ORACLE_Q47',
-    'q48_url_canonicalization',
-    'ORACLE_Q48',
-    'q49_hll_distinct_users',
-    '_oracle_q49',
-    'q50_incremental_dedup',
-    'ORACLE_Q50',
-    'q51_trending_tokens',
-    'ORACLE_Q51',
-    'POISON_MOD',
-    'q52_streaming_quarantine',
-    'ORACLE_Q52',
-    'q53_streaming_windowed_hll',
-    '_oracle_q53',
-    'q54_bloom_join_pruning',
-    '_oracle_q54',
-    'q55_user_event_features',
-    'ORACLE_Q55',
-    'q56_grouping_sets',
-    'ORACLE_Q56',
-    'MEGA_DOMAIN',
-    'MEGA_MOD',
-    'MEGA_LT',
-    '_skewed_pages_pandas',
-    'q57_streaming_salted_windows',
-    'ORACLE_Q57',
-    'q58_compaction_roundtrip',
-    'ORACLE_Q58',
-    'q59_sink_time_travel',
-    'ORACLE_Q59',
-    'PII_EMAIL_MOD',
-    'PII_PHONE_MOD',
-    'PII_EMAIL_RE',
-    'PII_PHONE_RE',
-    'q60_pii_redaction',
-    'ORACLE_Q60',
-    'q61_distinctive_terms',
-    'ORACLE_Q61',
-    '_q62_edges',
-    'q62_neardup_components',
-    '_q62_edges_sql',
-    '_Q62_EDGES_SQL',
-    'ORACLE_Q62',
-    'q63_user_pagerank',
-    '_oracle_q63',
-    'q64_cms_heavy_hitters',
-    '_oracle_q64',
-    'q65_funnel_sequences',
-    'ORACLE_Q65',
-    'SENTINEL_USER',
-    '_events_stream_fixture',
-    'q66_streaming_funnels',
-    'ORACLE_Q66',
-    'q67_streaming_windowed_cms',
-    '_oracle_q67',
-    'q68_triangle_counts',
-    'ORACLE_Q68',
-    'q69_hll_merge_rollup',
-    '_oracle_q69',
-    'q70_inverted_index',
-    'ORACLE_Q70',
-    'q71_doclen_quantiles',
-    '_DUCK_HIST_CUM',
-    '_DUCK_HIST_QS',
-    'ORACLE_Q71',
-    'q72_streaming_windowed_quantiles',
-    'ORACLE_Q72',
-    'q73_duplicate_ngram_rate',
-    'ORACLE_Q73',
-    'q74_incremental_mv_merge',
-    'ORACLE_Q74',
-    'q75_streaming_attribution_join',
-    'ORACLE_Q75',
-    'q76_weighted_sample',
-    'ORACLE_Q76',
-    'q77_zorder_layout',
-    '_oracle_q77',
-    'q78_drift_monitor',
-]
+__all__ = _star_exports(globals())  # noqa: F405

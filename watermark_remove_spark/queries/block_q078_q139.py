@@ -4,7 +4,6 @@ names and behavior identical to the original queries.py."""
 from __future__ import annotations
 
 from .block_q001_q078 import *  # noqa: F401,F403
-from .block_q001_q078 import __all__ as _prev_all
 
 
 
@@ -4048,140 +4047,4 @@ def q139_multi_source_stream_union(spark, sf_dir):
     return out.where(F.col("event_type") != "sentinel")
 
 
-__all__ = _prev_all + [
-    'ORACLE_Q78',
-    'q79_index_retrieval',
-    'ORACLE_Q79',
-    'q80_sketch_range_partition',
-    'ORACLE_Q80',
-    'q81_domain_cap',
-    'ORACLE_Q81',
-    'q82_streaming_outer_attribution',
-    'ORACLE_Q82',
-    'q83_containment_scores',
-    '_oracle_q83',
-    'q84_sink_incremental_read',
-    'ORACLE_Q84',
-    'q85_sequence_packing',
-    'ORACLE_Q85',
-    'q86_paragraph_dedup',
-    'ORACLE_Q86',
-    'q87_token_rarity',
-    'ORACLE_Q87',
-    'q88_vocab_coverage',
-    'ORACLE_Q88',
-    'q89_fuzzy_blocked_join',
-    'ORACLE_Q89',
-    'q90_salted_skew_join',
-    'ORACLE_Q90',
-    'q91_url_rule_filter',
-    'ORACLE_Q91',
-    'q92_checksum_audit',
-    'ORACLE_Q92',
-    'q93_asof_backfill',
-    'ORACLE_Q93',
-    'q94_mixture_quota',
-    'ORACLE_Q94',
-    'TTL_T0_EPOCH',
-    'q95_streaming_ttl_dedup',
-    'ORACLE_Q95',
-    'q96_phrase_search',
-    'ORACLE_Q96',
-    'q97_filter_cascade',
-    'ORACLE_Q97',
-    'q98_pmi_collocations',
-    'ORACLE_Q98',
-    'q99_overlap_chunking',
-    'ORACLE_Q99',
-    'STATIC_T0_EPOCH',
-    'q100_streaming_static_enrich',
-    'ORACLE_Q100',
-    '_Q101_SEGMENTS',
-    '_Q101_RULES',
-    'q101_robots_prefix_match',
-    '_Q101_SEG_SQL',
-    '_Q101_RULES_SQL',
-    'ORACLE_Q101',
-    'q102_gapfill_ffill',
-    'ORACLE_Q102',
-    'q103_split_leakage',
-    '_Q103_BUCKET',
-    'ORACLE_Q103',
-    'q104_winsorized_stats',
-    'ORACLE_Q104',
-    '_Q105_QUERIES',
-    '_Q105_VOCAB',
-    'q105_bm25_retrieval',
-    '_bm25_scored',
-    '_Q105_Q_SQL',
-    '_Q105_V_SQL',
-    '_Q105_AGG_CTES',
-    'ORACLE_Q105',
-    'q106_duplicate_span_extents',
-    '_Q106_WIN_HASH',
-    'ORACLE_Q106',
-    '_Q107_LANGS',
-    'q107_interleaved_mixture_order',
-    '_Q107_LANG_SQL',
-    'ORACLE_Q107',
-    'q108_streaming_leaderboard',
-    'ORACLE_Q108',
-    'q109_kn_lm_counts',
-    'ORACLE_Q109',
-    'q110_semantic_decontamination',
-    'ORACLE_Q110',
-    'q111_crawl_scheduler',
-    '_Q111_RATE',
-    '_Q111_PRIO',
-    '_Q111_WORKER',
-    'ORACLE_Q111',
-    'q112_distribution_matched_sample',
-    '_Q112_SEL',
-    'ORACLE_Q112',
-    '_shingle_index_frame',
-    'q113_index_delta_merge',
-    'ORACLE_Q113',
-    'q114_dedup_canonical_map',
-    'ORACLE_Q114',
-    'q115_decayed_reputation',
-    'ORACLE_Q115',
-    'q116_shard_rebalance_audit',
-    '_duck_hrw_list',
-    '_Q116_KEY_SQL',
-    'ORACLE_Q116',
-    'q117_deletion_cascade',
-    'ORACLE_Q117',
-    'q118_kanon_release',
-    'ORACLE_Q118',
-    'q119_crawl_diff',
-    '_Q119_FP',
-    '_Q119_KEY',
-    'ORACLE_Q119',
-    'q120_token_waterfill',
-    'ORACLE_Q120',
-    'q121_streaming_full_outer_attribution',
-    'ORACLE_Q121',
-    '_Q122_K',
-    '_Q122_SCALE',
-    'q122_kmeans_iteration',
-    'ORACLE_Q122',
-    'q123_output_layout_plan',
-    'ORACLE_Q123',
-    'q124_langid_confusion',
-    'ORACLE_Q124',
-    'q125_source_concentration',
-    'ORACLE_Q125',
-    'q126_window_burst_detection',
-    'ORACLE_Q126',
-    'q127_retention_cohorts',
-    'ORACLE_Q127',
-    'q128_quality_skyline',
-    'ORACLE_Q128',
-    'q129_markov_transitions',
-    'ORACLE_Q129',
-    'q130_streaming_admission_quota',
-    'ORACLE_Q130',
-    'q133_streaming_semi_attribution',
-    'ORACLE_Q133',
-    'q139_multi_source_stream_union',
-]
+__all__ = _star_exports(globals())  # noqa: F405

@@ -4,7 +4,6 @@ names and behavior identical to the original queries.py."""
 from __future__ import annotations
 
 from .block_q078_q139 import *  # noqa: F401,F403
-from .block_q078_q139 import __all__ as _prev_all
 
 
 
@@ -4034,131 +4033,4 @@ def q161_conversion_latency(spark, sf_dir):
     )
 
 
-__all__ = _prev_all + [
-    'ORACLE_Q139',
-    'q140_url_hierarchy_rollup',
-    'ORACLE_Q140',
-    'q141_khop_reachability',
-    'ORACLE_Q141',
-    'q137_prefix_filter_simjoin',
-    'ORACLE_Q137',
-    'q138_regional_supplier_volume',
-    'ORACLE_Q138',
-    'q136_streaming_cdc_apply',
-    'q134_sorted_neighborhood_pairs',
-    'ORACLE_Q134',
-    'q135_funnel_with_timeouts',
-    'ORACLE_Q135',
-    'q131_column_statistics',
-    'ORACLE_Q131',
-    'BITMAP_WORD_BITS',
-    'q132_bitmap_audience_algebra',
-    'ORACLE_Q132',
-    'ORACLE_Q136',
-    '_Q142_K',
-    '_Q142_B',
-    '_Q142_MAXH',
-    '_q142_h52',
-    '_duck_h52',
-    'q142_kmv_distinct_algebra',
-    'ORACLE_Q142',
-    'q143_token_weighted_percentiles',
-    'ORACLE_Q143',
-    'q144_cusum_changepoint',
-    'ORACLE_Q144',
-    '_Q145_TOPK',
-    'q145_bpe_merge_step',
-    'ORACLE_Q145',
-    'q146_join_size_forecast',
-    'ORACLE_Q146',
-    '_Q147_N',
-    'q147_streaming_bloom_pruned_enrich',
-    '_oracle_q147',
-    '_Q148_K',
-    '_Q148_M',
-    'q148_priority_sample',
-    'ORACLE_Q148',
-    'q149_streaming_mincount_distinct',
-    '_oracle_q149',
-    '_Q150_N',
-    'q150_streaming_bitmap_distinct',
-    'ORACLE_Q150',
-    'q151_lm_hit_scoring',
-    'ORACLE_Q151',
-    'q152_referential_integrity_audit',
-    '_oracle_q152_edge',
-    'ORACLE_Q152',
-    '_Q153_ROWS_PER_FILE',
-    'q153_zone_map_skipping_audit',
-    '_oracle_q153_pred',
-    'ORACLE_Q153',
-    '_Q154_K',
-    'q154_stratified_topk_sample',
-    'ORACLE_Q154',
-    'q155_sliding_bitmap_distinct_rollup',
-    'ORACLE_Q155',
-    '_Q156_BUCKET',
-    '_Q156_BLOCK_CAP',
-    '_Q156_W',
-    '_Q156_T',
-    'q156_record_linkage_scores',
-    'ORACLE_Q156',
-    '_Q157_COHORTS',
-    '_Q157_CRIT_MILLI',
-    'q157_experiment_guardrail',
-    'ORACLE_Q157',
-    '_Q158_CHUNK',
-    '_Q158_TOP_TYPES',
-    '_Q158_SCALE',
-    'q158_extractive_summary',
-    'ORACLE_Q158',
-    '_Q160_MIN_SET',
-    '_Q160_T_PPM',
-    'q160_shingle_containment',
-    'ORACLE_Q160',
-    '_Q163_FAR',
-    'q163_streaming_scd2_enrich',
-    'ORACLE_Q163',
-    'q164_daily_trend_slope',
-    'ORACLE_Q164',
-    'q165_triangle_clustering',
-    'ORACLE_Q165',
-    '_Q166_CAND',
-    '_Q166_K',
-    'q166_rrf_hybrid_retrieval',
-    'ORACLE_Q166',
-    '_Q167_BINW',
-    '_Q167_BINS',
-    'q167_snapshot_drift_chi2',
-    'ORACLE_Q167',
-    '_Q168_B',
-    'q168_equidepth_histogram',
-    'ORACLE_Q168',
-    'q169_posting_compression_audit',
-    'ORACLE_Q169',
-    '_Q170_BLOCKLIST',
-    'q170_blocklist_tagger',
-    '_oracle_q170',
-    'ORACLE_Q170',
-    'q171_precedence_mining',
-    'ORACLE_Q171',
-    'q172_ann_recall_audit',
-    '_oracle_q172',
-    'ORACLE_Q172',
-    '_Q173_CHUNK',
-    '_Q173_STRIDE',
-    'q173_contrastive_pairs',
-    'ORACLE_Q173',
-    'q174_last_touch_attribution',
-    'ORACLE_Q174',
-    '_Q175_W',
-    '_Q175_ARR_MAX',
-    'q175_roaring_container_audit',
-    'ORACLE_Q175',
-    'q176_percent_rank_normalization',
-    'ORACLE_Q176',
-    '_Q159_VOCAB_K',
-    'q159_oov_rate_audit',
-    'ORACLE_Q159',
-    'q161_conversion_latency',
-]
+__all__ = _star_exports(globals())  # noqa: F405

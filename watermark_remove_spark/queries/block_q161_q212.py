@@ -4,7 +4,6 @@ names and behavior identical to the original queries.py."""
 from __future__ import annotations
 
 from .block_q131_q176 import *  # noqa: F401,F403
-from .block_q131_q176 import __all__ as _prev_all
 
 
 
@@ -4023,137 +4022,4 @@ FROM ranked GROUP BY 1
 """
 
 
-__all__ = _prev_all + [
-    'ORACLE_Q161',
-    '_Q162_FILE_W',
-    '_Q162_BITS',
-    '_Q162_K',
-    'q162_bloom_file_skipping_audit',
-    '_Q162_WORKLOAD',
-    '_oracle_q162',
-    'ORACLE_Q162',
-    '_Q177_THRESHOLDS',
-    'q177_threshold_sweep',
-    'ORACLE_Q177',
-    '_Q178_BUDGET',
-    'q178_neyman_allocation',
-    'ORACLE_Q178',
-    '_Q179_N',
-    'q179_streaming_feed_silence',
-    'ORACLE_Q179',
-    'q180_seasonal_anomaly',
-    'ORACLE_Q180',
-    '_Q181_ANCHORS',
-    '_Q181_W',
-    '_Q181_K',
-    'q181_more_like_this',
-    'ORACLE_Q181',
-    'q182_dictionary_encoding_advisor',
-    'ORACLE_Q182',
-    'q183_dedup_yield',
-    'ORACLE_Q183',
-    'q184_transition_dwell',
-    'ORACLE_Q184',
-    '_Q185_N',
-    'q185_streaming_unknown_key_dlq',
-    'ORACLE_Q185',
-    '_Q186_QUERIES',
-    'q186_streaming_percolator',
-    '_oracle_q186',
-    'ORACLE_Q186',
-    '_Q187_RATE_MAX',
-    '_Q187_CONC_PPM',
-    'q187_bot_detection',
-    'ORACLE_Q187',
-    '_Q188_QUERIES',
-    'q188_intersection_planner',
-    '_oracle_q188',
-    'ORACLE_Q188',
-    '_Q189_MENTIONS',
-    '_q189_variants_spark',
-    '_q189_variants_duck',
-    'q189_symspell_edit1_join',
-    '_oracle_q189',
-    'ORACLE_Q189',
-    '_Q190_K',
-    '_Q190_SHARDS',
-    'q190_shard_topk_audit',
-    'ORACLE_Q190',
-    '_Q191_CAP',
-    '_Q191_MIN_CO',
-    'q191_coclick_similarity',
-    'ORACLE_Q191',
-    '_Q192_K',
-    '_q192_min_exprs',
-    'q192_streaming_minhash_feed_similarity',
-    '_oracle_q192',
-    'ORACLE_Q192',
-    '_Q193_MOD',
-    '_Q193_CHUNKS_EXPR',
-    'q193_cdc_chunking',
-    'ORACLE_Q193',
-    '_Q194_POSITIONS',
-    '_Q194_MIN_IMPR',
-    'q194_position_bias_coec',
-    'ORACLE_Q194',
-    'q195_langid_granularity_audit',
-    '_duck_lang_case',
-    'ORACLE_Q195',
-    'q196_retraction_variance',
-    '_Q196_HASH',
-    'ORACLE_Q196',
-    '_Q197_PIX',
-    '_Q197_BANDS',
-    '_Q197_HAM_MAX',
-    '_q197_ahash_udf',
-    '_q197_pix_duck',
-    'q197_ahash_media_dedup',
-    '_oracle_q197',
-    'ORACLE_Q197',
-    'q198_cross_nation_volume',
-    'ORACLE_Q198',
-    'q199_user_hits',
-    '_oracle_q199',
-    'ORACLE_Q199',
-    '_Q200_BATCH',
-    'q200_novelty_decay',
-    'ORACLE_Q200',
-    'q201_butterfly_cohesion',
-    'ORACLE_Q201',
-    'q202_landing_exit_analytics',
-    'ORACLE_Q202',
-    '_Q203_MAXP',
-    '_Q203_TOPK',
-    'q203_autocomplete_topk',
-    'ORACLE_Q203',
-    'q204_langid_calibration',
-    '_oracle_q204',
-    'ORACLE_Q204',
-    '_Q205_PLENS',
-    '_Q205_KNUTH',
-    '_Q205_SPACE',
-    'q205_cidr_lpm_join',
-    'ORACLE_Q205',
-    'q206_returned_item_revenue',
-    'ORACLE_Q206',
-    'q207_streaming_windowed_sample',
-    '_oracle_q207',
-    'ORACLE_Q207',
-    '_Q208_K',
-    'q208_kfold_contamination',
-    '_oracle_q208',
-    'ORACLE_Q208',
-    '_Q209_CUTOFF',
-    '_Q209_FEAT_DAYS',
-    '_Q209_HORIZON_DAYS',
-    'q209_churn_training_set',
-    'ORACLE_Q209',
-    '_Q210_EPS',
-    'q210_grid_epsilon_join',
-    'ORACLE_Q210',
-    'q211_session_incident_overlap',
-    'ORACLE_Q211',
-    '_Q212_BIN_S',
-    'q212_periodicity_detection',
-    'ORACLE_Q212',
-]
+__all__ = _star_exports(globals())  # noqa: F405

@@ -4,7 +4,6 @@ names and behavior identical to the original queries.py."""
 from __future__ import annotations
 
 from .block_q161_q212 import *  # noqa: F401,F403
-from .block_q161_q212 import __all__ as _prev_all
 
 
 
@@ -4066,108 +4065,4 @@ def q257_gini_gain_features(spark, sf_dir):
     )
 
 
-__all__ = _prev_all + [
-    'q213_mad_outlier_gate',
-    'ORACLE_Q213',
-    '_Q214_ROUNDS',
-    'q214_redirect_resolution',
-    'ORACLE_Q214',
-    '_Q215_TERM',
-    '_Q215_CTX',
-    'q215_kwic_concordance',
-    'ORACLE_Q215',
-    'q216_mutual_nn_pairs',
-    'ORACLE_Q216',
-    '_Q217_T0',
-    '_Q217_END_DAY',
-    'q217_discrete_hazard_table',
-    'ORACLE_Q217',
-    '_Q218_NA',
-    '_Q218_NB',
-    'q218_streaming_sequence_gaps',
-    'ORACLE_Q218',
-    'q219_fd_profile',
-    '_oracle_q219',
-    'ORACLE_Q219',
-    'q220_time_weighted_average',
-    'ORACLE_Q220',
-    'q221_promo_revenue_share',
-    'ORACLE_Q221',
-    'q222_small_quantity_revenue',
-    'ORACLE_Q222',
-    'q223_large_volume_orders',
-    'ORACLE_Q223',
-    'q224_dormant_high_balance',
-    'ORACLE_Q224',
-    '_TS_LCM',
-    'q225_theil_sen_slope',
-    'ORACLE_Q225',
-    'q226_merkle_snapshot_diff',
-    '_oracle_q226',
-    'ORACLE_Q226',
-    'q227_peak_concurrency',
-    'ORACLE_Q227',
-    '_events_stream_fixture_scrambled',
-    'q228_streaming_resequencer',
-    'ORACLE_Q228',
-    'q229_linear_attribution',
-    'ORACLE_Q229',
-    'q230_interpolated_gapfill',
-    'ORACLE_Q230',
-    'q231_preferred_supplier',
-    'ORACLE_Q231',
-    'q232_trailing_window_features',
-    'ORACLE_Q232',
-    'q233_multiband_disjunctive_revenue',
-    'ORACLE_Q233',
-    'q234_exact_global_quantiles',
-    'ORACLE_Q234',
-    'q235_embedding_quantization',
-    'ORACLE_Q235',
-    'q236_multi_distinct_profile',
-    'ORACLE_Q236',
-    'q237_top_session_paths',
-    'ORACLE_Q237',
-    'q238_ohlc_downsample',
-    'ORACLE_Q238',
-    'q239_nearest_asof_join',
-    'ORACLE_Q239',
-    '_Q240_FAR',
-    'q240_scd2_integrity_audit',
-    'ORACLE_Q240',
-    'q241_expanding_distinct',
-    'ORACLE_Q241',
-    'q242_order_count_distribution',
-    'ORACLE_Q242',
-    'q243_majority_imputation',
-    'ORACLE_Q243',
-    '_Q244_FAR',
-    'q244_bitemporal_lookup',
-    'ORACLE_Q244',
-    'q245_forecast_backtest',
-    'ORACLE_Q245',
-    'q246_paired_sign_test',
-    'ORACLE_Q246',
-    'q247_abc_classification',
-    'ORACLE_Q247',
-    'q248_order_value_reconciliation',
-    'ORACLE_Q248',
-    'q249_benford_audit',
-    '_oracle_q249',
-    'ORACLE_Q249',
-    'q250_rle_layout_audit',
-    'ORACLE_Q250',
-    'q251_ship_delay_classes',
-    'ORACLE_Q251',
-    'q252_shipping_priority',
-    'ORACLE_Q252',
-    'q253_market_share',
-    'ORACLE_Q253',
-    'q254_waiting_suppliers',
-    'ORACLE_Q254',
-    'q255_mann_whitney',
-    'ORACLE_Q255',
-    'q256_spearman_correlation',
-    'ORACLE_Q256',
-    'q257_gini_gain_features',
-]
+__all__ = _star_exports(globals())  # noqa: F405

@@ -4,7 +4,6 @@ names and behavior identical to the original queries.py."""
 from __future__ import annotations
 
 from .block_q213_q257 import *  # noqa: F401,F403
-from .block_q213_q257 import __all__ as _prev_all
 
 
 
@@ -4016,93 +4015,4 @@ LIMIT 20
 """
 
 
-__all__ = _prev_all + [
-    'ORACLE_Q257',
-    'q258_association_rules',
-    'ORACLE_Q258',
-    'q259_autocorrelation',
-    'ORACLE_Q259',
-    'q260_target_encoding',
-    'ORACLE_Q260',
-    'q261_ks_two_sample',
-    'ORACLE_Q261',
-    'q262_naive_bayes_model',
-    'ORACLE_Q262',
-    'q263_nation_profit',
-    'ORACLE_Q263',
-    'q264_top_supplier',
-    'ORACLE_Q264',
-    'q265_crdt_merge',
-    'ORACLE_Q265',
-    'q266_ndcg_ranking_quality',
-    'ORACLE_Q266',
-    'q267_supplier_relationship',
-    'ORACLE_Q267',
-    'q268_ledger_replay',
-    'ORACLE_Q268',
-    'q269_weighted_median',
-    'ORACLE_Q269',
-    'q270_excess_volume_suppliers',
-    'ORACLE_Q270',
-    'q271_allen_interval_algebra',
-    'ORACLE_Q271',
-    'q272_rendezvous_hashing',
-    '_DUCK_HRW_H',
-    'ORACLE_Q272',
-    'q273_important_parts',
-    'ORACLE_Q273',
-    'q274_activity_streaks',
-    'ORACLE_Q274',
-    'q275_max_drawdown',
-    'ORACLE_Q275',
-    'q276_priority_check',
-    'ORACLE_Q276',
-    'q277_kendall_tau',
-    'ORACLE_Q277',
-    'q278_rolling_median_gate',
-    'ORACLE_Q278',
-    'q279_sequential_stopping',
-    'ORACLE_Q279',
-    'q280_good_turing_spectrum',
-    'ORACLE_Q280',
-    'q281_effective_languages',
-    'ORACLE_Q281',
-    'q282_wilson_ranking',
-    'ORACLE_Q282',
-    'q283_token_dispersion',
-    'ORACLE_Q283',
-    'q284_burn_rate_alerts',
-    'ORACLE_Q284',
-    'q285_power_iteration_pca',
-    'ORACLE_Q285',
-    'q286_simpsons_audit',
-    'ORACLE_Q286',
-    'q287_trend_r2_gate',
-    'ORACLE_Q287',
-    'q288_anova_gate',
-    '_oracle_q288',
-    'q289_bipartite_kcore',
-    'ORACLE_Q289',
-    'q290_indomain_selection',
-    'ORACLE_Q290',
-    'q291_leadlag_xcorr',
-    'ORACLE_Q291',
-    'q292_jackknife_ratio',
-    '_oracle_q292',
-    'q293_source_tv_drift',
-    'ORACLE_Q293',
-    'q294_capture_recapture',
-    'ORACLE_Q294',
-    'q295_cochran_armitage',
-    'ORACLE_Q295',
-    'q296_diff_in_diff',
-    '_oracle_q296',
-    'q297_crosslingual_anchors',
-    'ORACLE_Q297',
-    'q298_compaction_binning',
-    'ORACLE_Q298',
-    'q299_min_window_proximity',
-    'ORACLE_Q299',
-    'q300_ewma_control_chart',
-    'ORACLE_Q300',
-]
+__all__ = _star_exports(globals())  # noqa: F405

@@ -4,7 +4,6 @@ names and behavior identical to the original queries.py."""
 from __future__ import annotations
 
 from .block_q257_q300 import *  # noqa: F401,F403
-from .block_q257_q300 import __all__ as _prev_all
 
 
 
@@ -4030,89 +4029,4 @@ def q341_fill_rate_census(spark, sf_dir):
     )
 
 
-__all__ = _prev_all + [
-    'q301_source_overlap_jaccard',
-    'ORACLE_Q301',
-    'q302_rfm_segments',
-    'ORACLE_Q302',
-    'q303_business_day_latency',
-    'ORACLE_Q303',
-    'q304_gini_concentration',
-    'ORACLE_Q304',
-    'q305_gains_lift_table',
-    'ORACLE_Q305',
-    'q306_share_of_parent',
-    'ORACLE_Q306',
-    'q307_front_coding_advisor',
-    'ORACLE_Q307',
-    'q308_dow_hour_residuals',
-    'ORACLE_Q308',
-    'q309_mmr_retrieval',
-    '_oracle_q309',
-    'q310_centroid_coherence',
-    'ORACLE_Q310',
-    'q311_forecast_revenue',
-    'ORACLE_Q311',
-    'q312_gate_cooccurrence',
-    'ORACLE_Q312',
-    'q313_inversion_count',
-    'ORACLE_Q313',
-    'q314_runs_test',
-    'ORACLE_Q314',
-    'q315_relational_division',
-    'ORACLE_Q315',
-    'q316_vocab_turnover',
-    'ORACLE_Q316',
-    'q317_degree_assortativity',
-    'ORACLE_Q317',
-    'q318_sigma_day_gate',
-    'ORACLE_Q318',
-    'q319_seasonal_mase',
-    'ORACLE_Q319',
-    'q320_margin_audit',
-    'ORACLE_Q320',
-    'q321_range_count_index',
-    'ORACLE_Q321',
-    'q322_median_order_ci',
-    'ORACLE_Q322',
-    'q323_pvm_bridge',
-    'ORACLE_Q323',
-    'q324_greedy_set_cover',
-    '_oracle_q324',
-    'q325_budget_packing',
-    'ORACLE_Q325',
-    'q326_kcenter_seeding',
-    '_oracle_q326',
-    'q327_rows_vs_range_audit',
-    'ORACLE_Q327',
-    'q328_fifo_lot_matching',
-    'ORACLE_Q328',
-    'q329_weighted_jaccard',
-    'ORACLE_Q329',
-    'q330_duplicate_payment_audit',
-    'ORACLE_Q330',
-    '_Q331_TABLES',
-    'q331_partition_sizing_advisor',
-    '_oracle_q331',
-    'q332_hoover_index',
-    'ORACLE_Q332',
-    '_Q333_COLS',
-    '_Q333_DUCK',
-    'q333_delta_bitpack_advisor',
-    '_oracle_q333',
-    'q334_sourcing_coverage',
-    'ORACLE_Q334',
-    'q335_cohort_payback',
-    'ORACLE_Q335',
-    'q336_markov_path_ranking',
-    'ORACLE_Q336',
-    'q337_copeland_ranking',
-    'ORACLE_Q337',
-    'q338_graph_topology_panel',
-    'ORACLE_Q338',
-    'q339_ranking_weight_sensitivity',
-    'ORACLE_Q339',
-    'q340_topic_shift_audit',
-    'ORACLE_Q340',
-    'q341_fill_rate_census',
-]
+__all__ = _star_exports(globals())  # noqa: F405

@@ -4,7 +4,6 @@ names and behavior identical to the original queries.py."""
 from __future__ import annotations
 
 from .block_q301_q341 import *  # noqa: F401,F403
-from .block_q301_q341 import __all__ as _prev_all
 
 
 
@@ -4008,84 +4007,4 @@ ORDER BY w
 """
 
 
-__all__ = _prev_all + [
-    'ORACLE_Q341',
-    'q342_rank_biased_overlap',
-    '_oracle_q342',
-    'q343_forecast_reconciliation',
-    'ORACLE_Q343',
-    'q344_kd_median_grid',
-    'ORACLE_Q344',
-    'q345_histogram_resolution_advisor',
-    '_oracle_q345',
-    'q346_bullwhip_ratio',
-    'ORACLE_Q346',
-    'q347_heaps_doubling',
-    'ORACLE_Q347',
-    'q348_shrinkage_leaderboard',
-    'ORACLE_Q348',
-    'q349_apportionment_sensitivity',
-    'ORACLE_Q349',
-    'q350_sessionization_sweep',
-    'ORACLE_Q350',
-    'q351_predicate_ordering',
-    'ORACLE_Q351',
-    'q352_copula_grid',
-    'ORACLE_Q352',
-    'q353_persistence_baseline',
-    'ORACLE_Q353',
-    'q354_vshape_pattern_scan',
-    'ORACLE_Q354',
-    'q355_littles_law_gap',
-    'ORACLE_Q355',
-    'q356_dimension_utilization',
-    'ORACLE_Q356',
-    'q357_growth_accounting',
-    'ORACLE_Q357',
-    'q358_attach_rate_matrix',
-    'ORACLE_Q358',
-    'q359_quantile_treatment_effects',
-    'ORACLE_Q359',
-    'q360_pareto_front_peeling',
-    '_oracle_q360',
-    'q361_calendar_adjusted_growth',
-    'ORACLE_Q361',
-    'q362_transition_stationarity',
-    'ORACLE_Q362',
-    'q363_var_expected_shortfall',
-    'ORACLE_Q363',
-    'q364_synthetic_control',
-    'ORACLE_Q364',
-    'q365_rare_token_runs',
-    'ORACLE_Q365',
-    'q366_panel_persistence',
-    'ORACLE_Q366',
-    'q367_vocab_exclusivity',
-    'ORACLE_Q367',
-    'q368_rollup_boundary_leakage',
-    'ORACLE_Q368',
-    'q369_mean_of_means_bias',
-    'ORACLE_Q369',
-    'q370_behavioral_stereotypy',
-    'ORACLE_Q370',
-    'q371_risk_pooling',
-    'ORACLE_Q371',
-    'q372_demand_taxonomy',
-    'ORACLE_Q372',
-    'q373_capacitated_assignment',
-    'ORACLE_Q373',
-    'q374_twoway_fe_anomalies',
-    'ORACLE_Q374',
-    'q375_variance_ratio',
-    'ORACLE_Q375',
-    'q376_newsvendor_stocking',
-    'ORACLE_Q376',
-    'q377_cohort_halflife',
-    'ORACLE_Q377',
-    'q378_terminal_digit_audit',
-    'ORACLE_Q378',
-    'q379_trigger_interval_advisor',
-    'ORACLE_Q379',
-    'q380_watermark_sizing_advisor',
-    'ORACLE_Q380',
-]
+__all__ = _star_exports(globals())  # noqa: F405

@@ -4,7 +4,6 @@ names and behavior identical to the original queries.py."""
 from __future__ import annotations
 
 from .block_q341_q380 import *  # noqa: F401,F403
-from .block_q341_q380 import __all__ as _prev_all
 
 
 
@@ -4017,74 +4016,4 @@ ORDER BY 1
 """
 
 
-__all__ = _prev_all + [
-    'q381_assortment_collateral',
-    'ORACLE_Q381',
-    'q382_price_band_migration',
-    'ORACLE_Q382',
-    'q383_shingle_width_sweep',
-    '_oracle_q383',
-    'q384_direct_standardization',
-    'ORACLE_Q384',
-    'q385_load_duration_curve',
-    'ORACLE_Q385',
-    'q386_line_fragmentation',
-    'ORACLE_Q386',
-    'q387_attribution_lookback',
-    'ORACLE_Q387',
-    'q388_new_returning_mix',
-    'ORACLE_Q388',
-    'q389_renewal_diagnostics',
-    'ORACLE_Q389',
-    'q390_peak_shaving',
-    'ORACLE_Q390',
-    'q391_behavior_novelty',
-    'ORACLE_Q391',
-    'q392_exposure_response',
-    'ORACLE_Q392',
-    'q393_shapley_attribution',
-    'ORACLE_Q393',
-    'q394_queue_replay',
-    'ORACLE_Q394',
-    'q395_ldiversity_audit',
-    'ORACLE_Q395',
-    'q396_voptimal_histogram',
-    'ORACLE_Q396',
-    'q397_lru_hit_curve',
-    'ORACLE_Q397',
-    'q398_rtm_deciles',
-    'ORACLE_Q398',
-    'q399_isotonic_calibration',
-    'ORACLE_Q399',
-    'q400_ab_duration_advisor',
-    'ORACLE_Q400',
-    'q401_ta_early_termination',
-    'ORACLE_Q401',
-    'q402_retry_storm',
-    'ORACLE_Q402',
-    'q403_median_polish',
-    'ORACLE_Q403',
-    'q404_jl_projection_audit',
-    '_oracle_q404',
-    'q405_lang_modularity',
-    '_oracle_q405',
-    'q406_bounded_load_chash',
-    '_oracle_q406',
-    'q407_ls_changepoint',
-    'ORACLE_Q407',
-    'q408_second_price_auction',
-    'ORACLE_Q408',
-    'q409_splithalf_stability',
-    '_oracle_q409',
-    'q410_binpack_bounds',
-    'ORACLE_Q410',
-    '_Q411_STATES',
-    '_det4',
-    '_q411_mat_names',
-    'q411_markov_hitting_time',
-    '_oracle_q411',
-    'q412_lsm_compaction_advisor',
-    '_oracle_q412',
-    'q413_cube_view_selection',
-    'ORACLE_Q413',
-]
+__all__ = _star_exports(globals())  # noqa: F405

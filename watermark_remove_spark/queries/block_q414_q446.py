@@ -4,7 +4,6 @@ names and behavior identical to the original queries.py."""
 from __future__ import annotations
 
 from .block_q381_q413 import *  # noqa: F401,F403
-from .block_q381_q413 import __all__ as _prev_all
 
 
 
@@ -4028,75 +4027,4 @@ FROM agg
 """
 
 
-__all__ = _prev_all + [
-    'q414_wilcoxon_signed_rank',
-    'ORACLE_Q414',
-    '_pow_chain',
-    'q415_dorfman_pooling',
-    '_oracle_q415',
-    'q416_bloom_sizing_sweep',
-    '_oracle_q416',
-    'q417_coupon_collector',
-    'ORACLE_Q417',
-    'q418_chao1_richness',
-    'ORACLE_Q418',
-    'q419_horvitz_thompson_audit',
-    '_oracle_q419',
-    'q420_loo_source_influence',
-    'ORACLE_Q420',
-    'q421_snapshot_interval_advisor',
-    'ORACLE_Q421',
-    'q422_ski_rental_advisor',
-    'ORACLE_Q422',
-    'q423_sjf_counterfactual',
-    'ORACLE_Q423',
-    'q424_siegel_repeated_median',
-    'ORACLE_Q424',
-    'q425_sketch_selection_advisor',
-    '_oracle_q425',
-    'q426_sampling_bound_audit',
-    '_oracle_q426',
-    'q427_rich_club_profile',
-    '_oracle_q427',
-    'q428_kish_ess_audit',
-    'ORACLE_Q428',
-    'q429_cuped_variance_reduction',
-    'ORACLE_Q429',
-    'q430_delta_join_audit',
-    'ORACLE_Q430',
-    'q431_embedding_layout_audit',
-    '_oracle_q431',
-    'q432_lttb_downsample',
-    'ORACLE_Q432',
-    'q433_pagination_cost_advisor',
-    'ORACLE_Q433',
-    'q434_emd_drift',
-    'ORACLE_Q434',
-    'q435_syndication_matrix',
-    '_oracle_q435',
-    'q436_decision_stump',
-    'ORACLE_Q436',
-    'q437_time_underwater',
-    'ORACLE_Q437',
-    'q438_jarque_bera',
-    '_q438_exprs',
-    '_oracle_q438',
-    'q439_hash_spacings_audit',
-    '_oracle_q439',
-    'q440_lorenz_asymmetry',
-    'ORACLE_Q440',
-    'q441_greedy_bandit_replay',
-    'ORACLE_Q441',
-    'q442_working_set_curve',
-    'ORACLE_Q442',
-    '_det3',
-    '_q443_reach_exprs',
-    'q443_markov_removal_attribution',
-    '_oracle_q443',
-    'q444_reserve_price_sweep',
-    'ORACLE_Q444',
-    'q445_eager_agg_advisor',
-    'ORACLE_Q445',
-    'q446_insert_scatter_audit',
-    'ORACLE_Q446',
-]
+__all__ = _star_exports(globals())  # noqa: F405

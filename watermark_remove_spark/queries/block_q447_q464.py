@@ -4,7 +4,6 @@ names and behavior identical to the original queries.py."""
 from __future__ import annotations
 
 from .block_q414_q446 import *  # noqa: F401,F403
-from .block_q414_q446 import __all__ as _prev_all
 
 
 
@@ -1995,41 +1994,4 @@ FROM groups
 """
 
 
-__all__ = _prev_all + [
-    'q447_partial_agg_advisor',
-    '_oracle_q447',
-    'q448_watermark_skew_audit',
-    '_oracle_q448',
-    'q449_zipf_doubling_profile',
-    'ORACLE_Q449',
-    'q450_interrupted_time_series',
-    'ORACLE_Q450',
-    'q451_join_state_forecast',
-    'ORACLE_Q451',
-    'q452_kpi_bridge',
-    'ORACLE_Q452',
-    'q453_sortedness_runs_audit',
-    'ORACLE_Q453',
-    'q454_rle_layout_sensitivity',
-    'ORACLE_Q454',
-    'q455_peeking_audit',
-    '_oracle_q455',
-    'q456_disorder_profile',
-    'ORACLE_Q456',
-    'q457_fanout_tail_audit',
-    'ORACLE_Q457',
-    'q458_agg_tree_advisor',
-    '_oracle_q458',
-    'q459_equivalence_tost',
-    '_oracle_q459',
-    'q460_dedup_roi_ranking',
-    '_oracle_q460',
-    'q461_nbu_aging_test',
-    'ORACLE_Q461',
-    'q462_watermark_completeness_curve',
-    'ORACLE_Q462',
-    'q463_backlog_capacity_sweep',
-    'ORACLE_Q463',
-    'q464_fingerprint_collision_audit',
-    '_oracle_q464',
-]
+__all__ = _star_exports(globals())  # noqa: F405
