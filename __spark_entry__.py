@@ -5,12 +5,10 @@
 ``watermark_remove_spark.queries`` (SURVEY.md §2 coverage), each
 DuckDB-cross-checked at sf0.01 unless rows-only (non-SQL-expressible).
 
-Registry order is the driver-check order and is FROZEN (round-4
-verdict #1): positions 1-50 are the oldest never-driver-checked
-block (q51-q100 ascending), the q101-q413 drain order follows, and
-already-driver-green entries ride behind; new queries sort into the
-tail by number (``queries/_registry.py``, pinned by
-``tests/test_registry_order.py``).
+Registry order is the driver-check order: entries the driver has
+never hashed green come first, oldest (lowest number) first, and the
+driver-green ones (``DRIVER_GREEN``) ride behind by number
+(``queries/_registry.py``, pinned by ``tests/test_registry_order.py``).
 """
 
 from __future__ import annotations

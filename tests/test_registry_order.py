@@ -1,58 +1,60 @@
-"""Registry-order discipline (round-4 verdict #1, frozen round 5).
+"""Registry-order discipline: the order the driver checks entries in.
 
 The driver's correctness harness checks exactly the FIRST 50 entries
-of ``__spark_entry__.queries()``.  These tests pin the contract so a
-future session cannot silently displace the drain order again:
+of ``__spark_entry__.queries()``.  These tests pin the contract:
 
-- positions 1-50 are q51-q100 ascending (the oldest block that has
-  never had a driver row);
-- everything behind follows the deterministic drain order
-  (q101-q413 ascending, then q01-q50, then q414+);
-- new queries (q465+) sort into the tail BY NUMBER — the head is
-  structurally unreachable for them;
+- entries the driver has never hashed green come first, oldest
+  (lowest number) first: q63, q85, q87, q88, then q101-q146;
+- every driver-green entry (``DRIVER_GREEN``) rides behind, by number;
+- new queries are never-green, so they sort behind the older
+  never-green entries and ahead of every green one;
+- a registry key that does not start with ``q<number>_`` is a
+  ValueError that names it;
 - retired slots (q380, q453) are absent from the registry but their
   functions and oracles remain importable (still regression-tested).
 """
 
 from __future__ import annotations
 
-import re
+import pytest
+
+from watermark_remove_spark.queries._registry import (
+    DRIVER_GREEN,
+    _qnum,
+    _registry_order,
+)
 
 
-def _qnum(name: str) -> int:
-    return int(re.match(r"q(\d+)", name).group(1))
-
-
-def test_head_50_is_oldest_unchecked_block():
+def test_head_50_is_oldest_never_green():
     from watermark_remove_spark.queries import ORACLES, QUERIES
 
     names = list(QUERIES)
-    head = names[:50]
-    assert [_qnum(n) for n in head] == list(range(51, 101))
+    head = [_qnum(n) for n in names[:50]]
+    assert head == [63, 85, 87, 88, *range(101, 147)]
     # ORACLES iterates in the same order (the driver zips them)
-    assert list(ORACLES) == [n for n in names if n in ORACLES]
+    assert list(ORACLES) == names
 
 
-def test_tail_follows_drain_order():
+def test_never_green_then_green_each_ascending():
     from watermark_remove_spark.queries import QUERIES
 
-    nums = [_qnum(n) for n in list(QUERIES)[50:]]
-    drain = [x for x in nums if 101 <= x <= 413]
-    green_old = [x for x in nums if x <= 50]
-    green_new = [x for x in nums if x >= 414]
-    # three contiguous, internally ascending segments in this order
-    assert nums == drain + green_old + green_new
-    assert drain == sorted(drain) and green_old == sorted(green_old)
-    assert green_new == sorted(green_new)
+    keys = [(_qnum(n) in DRIVER_GREEN, _qnum(n)) for n in QUERIES]
+    assert keys == sorted(keys)
+    # 146 green numbers, q453 among them (retired from the registry)
+    assert len(DRIVER_GREEN) == 146
+    assert sum(green for green, _ in keys) == 145
 
 
-def test_new_entries_cannot_reach_the_head():
-    from watermark_remove_spark.queries._registry import _registry_order
+def test_new_entries_sort_behind_older_never_green():
+    names = ["q999_new", "q51_x", "q465_new", "q63_x", "q1_x", "q413_x"]
+    assert _registry_order(names) == [
+        "q63_x", "q413_x", "q465_new", "q999_new", "q1_x", "q51_x",
+    ]
 
-    names = [f"q{i:d}_x" for i in range(51, 101)] + ["q465_new", "q999_new"]
-    order = _registry_order(names)
-    assert order[:50] == sorted(names[:50], key=_qnum)
-    assert order[-2:] == ["q465_new", "q999_new"]
+
+def test_non_query_key_is_a_named_value_error():
+    with pytest.raises(ValueError, match="'ORACLE_Q63'"):
+        _registry_order(["q63_x", "ORACLE_Q63"])
 
 
 def test_retired_slots_absent_but_functions_remain():

@@ -108,6 +108,15 @@ def run_level(
     raise RuntimeError(f"no JSON from {master}: {out.stdout[-500:]} {out.stderr[-2000:]}")
 
 
+def _cpu_list(spec: str) -> set[int]:
+    """CPUs named by a taskset list such as '0-11' or '0,2,4-7'."""
+    cpus: set[int] = set()
+    for part in spec.split(","):
+        lo, _, hi = part.partition("-")
+        cpus.update(range(int(lo), int(hi or lo) + 1))
+    return cpus
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", type=int, default=480_000)
@@ -126,6 +135,16 @@ def main() -> None:
         "1-min loadavg exceeds this at invocation start (0 disables)",
     )
     args = ap.parse_args()
+
+    pin = args.pin_cores or None
+    if pin:
+        missing = sorted(_cpu_list(pin) - os.sched_getaffinity(0))
+        if missing:
+            print(
+                f"WARNING: --pin-cores {pin} names CPUs {missing} that this"
+                " process may not run on; running both levels unpinned"
+            )
+            pin = None
 
     load1 = os.getloadavg()[0]
     if args.max_load and load1 > args.max_load:
@@ -166,7 +185,6 @@ def main() -> None:
     # the best per level: host-level noise windows (shared-VM
     # neighbors) then bias both sides of the efficiency ratio rather
     # than silently sinking one level's only measurement.
-    pin = args.pin_cores or None
     if pin:
         print(f"pinning both levels: taskset -c {pin}")
     results = {}

@@ -71,9 +71,11 @@ def main():
             print(f"{name}: rows-only ({len(srows)} rows) OK")
             continue
         try:
-            res = con.execute(sql)
-            dcols = [d[0] for d in res.description]
-            drows = res.fetchall()
+            # through Arrow, as the driver fetches: a HUGEINT column
+            # arrives as Decimal (fetchall() would hand back a plain int)
+            tbl = con.execute(sql).arrow()
+            dcols = tbl.column_names
+            drows = list(zip(*(c.to_pylist() for c in tbl.columns)))
         except Exception as e:
             print(f"{name}: DUCKDB ERROR {type(e).__name__}: {str(e)[:300]}")
             failures.append(name)

@@ -234,8 +234,9 @@ def duck_pagerank_sql(edges_cte: str, iterations: int = 5) -> str:
 )""")
         parts.append(f"""r{i + 1} AS (
   SELECT n.node,
-         CAST({teleport} AS BIGINT)
-         + ({PR_DAMP_NUM} * COALESCE(c.s, 0)) // {PR_DAMP_DEN} AS rank_scaled
+         CAST(CAST({teleport} AS BIGINT)
+              + ({PR_DAMP_NUM} * COALESCE(c.s, 0)) // {PR_DAMP_DEN}
+              AS BIGINT) AS rank_scaled
   FROM nodes n LEFT JOIN c{i} c ON n.node = c.node
 )""")
     return (

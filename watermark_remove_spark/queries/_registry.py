@@ -14,21 +14,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import block_q447_q464 as _catalog
 
-# Round-5 catalog consolidation (round-4 verdict #3): a variant must
-# argue a concrete delta over its sibling (the q154-over-q148 rule).
-# Two q288-q464-block entries fail it and are RETIRED from the
-# registry — functions and pytests remain (the operators stay
-# regression-tested), only the catalog slot and its oracle row drop;
-# SURVEY §2 carries a per-slot note:
-#   q380_watermark_sizing_advisor — watermark-delay sweep priced from
-#     SIMULATED portable-hash jitter; q462 runs the same sweep priced
-#     from the MEASURED disorder profile (q456) and q40 already
-#     proves late-data semantics, leaving q380 no delta.
-#   q453_sortedness_runs_audit — ascending-run counting under three
-#     physical orderings; q454 runs the identical lag-window plan
-#     over the same three orderings AND prices the decision (RLE
-#     bytes), leaving q453's presortedness ratio no plan or decision
-#     delta.
+# Variants with no concrete delta over a sibling: out of the registry,
+# while their functions and pytests stay (SURVEY.md §2 has the
+# per-slot notes: q462 subsumes q380, q454 subsumes q453).
 RETIRED = {"q380_watermark_sizing_advisor", "q453_sortedness_runs_audit"}
 
 _QUERY_NAME = re.compile(r"q(\d+)_")
@@ -41,23 +29,19 @@ def _qnum(name: str) -> int:
     return int(m.group(1))
 
 
-# ROUND-5 REGISTRY DISCIPLINE (round-4 verdict #1).  The driver's
-# correctness harness checks exactly the FIRST 50 registry entries
-# each round.  Rounds 1-3 drained the q01-q50 region; round 4's
-# "new entries at the head" rule made the driver check q414-q464 and
-# left q51-q413 (the round-4 verdict's 364-query backlog) on
-# selfcheck only.  The head is therefore now FROZEN to the oldest
-# never-driver-checked block — q51-q100 ascending — and the rest of
-# the registry is the drain order for future rounds: q101-q413
-# ascending (next in line), then the already-driver-green q01-q50 and
-# q414-q464.  New queries (q465+) sort into the TAIL by number —
-# never ahead of position 50.
+# Every query number the driver's correctness harness has hashed green
+# (CORRECTNESS_r01-r05): q1-q100 and q414-q464, except q63, q85, q87,
+# q88 and q416.
+DRIVER_GREEN = frozenset({*range(1, 101), *range(414, 465)} - {63, 85, 87, 88, 416})
+
+
+# REGISTRY ORDER IS THE DRIVER'S CHECK ORDER.  The driver hashes
+# exactly the first 50 entries each round, so the entries it has never
+# shown green come first, oldest (lowest number) first; the green ones
+# ride behind by number.  New queries are never-green and so sort
+# ahead of every green entry, behind the older never-green ones.
 def _registry_order(names: list[str]) -> list[str]:
-    head = sorted((n for n in names if 51 <= _qnum(n) <= 100), key=_qnum)
-    drain = sorted((n for n in names if 101 <= _qnum(n) <= 413), key=_qnum)
-    green_old = sorted((n for n in names if _qnum(n) <= 50), key=_qnum)
-    green_new = sorted((n for n in names if _qnum(n) >= 414), key=_qnum)
-    return head + drain + green_old + green_new
+    return sorted(names, key=lambda n: (_qnum(n) in DRIVER_GREEN, _qnum(n)))
 
 
 def _oracle(n: int) -> str:
@@ -75,5 +59,4 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         ]
     )
 }
-# same order as QUERIES: the driver zips them
 ORACLES: dict[str, str] = {name: _oracle(_qnum(name)) for name in QUERIES}

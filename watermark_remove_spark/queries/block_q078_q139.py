@@ -455,7 +455,7 @@ WITH d AS (
            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_excl
   FROM d
 )
-SELECT lang, shard, cum_excl // 2048 AS bin_id,
+SELECT lang, shard, CAST(cum_excl // 2048 AS BIGINT) AS bin_id,
        count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS bin_tokens
 FROM o GROUP BY 1, 2, 3
 """
@@ -578,7 +578,7 @@ WITH tok AS (
   SELECT token, CAST(row_number() OVER (ORDER BY count(*) DESC, token) AS BIGINT) AS rank
   FROM tok GROUP BY token
 ), scored AS (
-  SELECT doc_id, lang, sum(rank) // count(*) AS score
+  SELECT doc_id, lang, CAST(sum(rank) // count(*) AS BIGINT) AS score
   FROM tok JOIN ranked USING (token)
   GROUP BY doc_id, lang
 )
@@ -636,7 +636,8 @@ WITH vocab AS (
          sum(cnt) OVER () AS total
   FROM counts
 )
-SELECT rank, token, CAST(cnt AS BIGINT) AS cnt, (100 * cum) // total AS cov_pct
+SELECT rank, token, CAST(cnt AS BIGINT) AS cnt,
+       CAST((100 * cum) // total AS BIGINT) AS cov_pct
 FROM curve WHERE rank <= 25
 """
 
@@ -1721,7 +1722,7 @@ WITH d AS (
   FROM d JOIN bounds b USING (lang)
 )
 SELECT lang, p05, p95, count(*) AS n_docs,
-       (1000 * sum(c)) // count(*) AS wmean_milli,
+       CAST((1000 * sum(c)) // count(*) AS BIGINT) AS wmean_milli,
        CAST(sum(lo) AS BIGINT) AS n_clipped_low,
        CAST(sum(hi) AS BIGINT) AS n_clipped_high
 FROM clipped GROUP BY 1, 2, 3

@@ -1000,8 +1000,8 @@ def q223_large_volume_orders(spark, sf_dir):
 ORACLE_Q223 = """
 WITH big AS (
   SELECT l_orderkey,
-         sum(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT))
-           AS order_qty_e2
+         CAST(sum(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT))
+              AS BIGINT) AS order_qty_e2
   FROM lineitem GROUP BY 1
   HAVING sum(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT))
          > 25000

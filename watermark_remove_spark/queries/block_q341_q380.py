@@ -2050,10 +2050,10 @@ def _oracle_q360():
     head = """
 WITH base AS (
   SELECT l_suppkey,
-         (sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) * 1000000)
-           // count(*) AS ret_ppm,
-         sum(datediff('day', o_orderdate, l_shipdate)) // count(*)
-           AS lag_days
+         CAST((sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) * 1000000)
+              // count(*) AS BIGINT) AS ret_ppm,
+         CAST(sum(datediff('day', o_orderdate, l_shipdate)) // count(*)
+              AS BIGINT) AS lag_days
   FROM lineitem JOIN orders ON l_orderkey = o_orderkey
   GROUP BY l_suppkey
 )"""
