@@ -5,9 +5,9 @@
 ``watermark_remove_spark.queries`` (SURVEY.md §2 coverage), each
 DuckDB-cross-checked at sf0.01 unless rows-only (non-SQL-expressible).
 
-Registry order is the driver-check order: entries the driver has
-never hashed green come first, oldest (lowest number) first, and the
-driver-green ones (``DRIVER_GREEN``) ride behind by number
+Registry order is the correctness harness's check order: entries it
+has never hashed green come first, oldest (lowest number) first, and
+the green ones (``DRIVER_GREEN``) ride behind by number
 (``queries/_registry.py``, pinned by ``tests/test_registry_order.py``).
 """
 

@@ -1,9 +1,9 @@
 """Oracle output types cannot drift to DuckDB's 128-bit integers.
 
 DuckDB widens ``sum`` over BIGINT (and arithmetic on such a sum) to
-HUGEINT.  Fetched through Arrow, as the driver's value hash does, a
-HUGEINT column arrives as ``Decimal`` while Spark's column is a long,
-so equal values hash differently.  Every oracle must therefore cast
+HUGEINT.  Fetched through Arrow, as the correctness harness's value
+hash does, a HUGEINT column arrives as ``Decimal`` while Spark's
+column is a long, so equal values hash differently.  Every oracle must therefore cast
 such columns back to BIGINT; this test DESCRIBEs every registry oracle
 over the sf0.001 tables and names each 128-bit column it finds."""
 

@@ -1,13 +1,17 @@
-"""Registry-order discipline: the order the driver checks entries in.
+"""Registry-order discipline: the order the correctness harness
+checks entries in.
 
-The driver's correctness harness checks exactly the FIRST 50 entries
-of ``__spark_entry__.queries()``.  These tests pin the contract:
+The correctness harness checks exactly the FIRST 50 entries of
+``__spark_entry__.queries()``.  These tests pin the contract:
 
-- entries the driver has never hashed green come first, oldest
+- entries the harness has never hashed green come first, oldest
   (lowest number) first: q63, q85, q87, q88, then q101-q146;
-- every driver-green entry (``DRIVER_GREEN``) rides behind, by number;
+- the rest of the registry follows the drain order: never-green
+  entries by number, then every green entry (``DRIVER_GREEN``) by
+  number;
 - new queries are never-green, so they sort behind the older
-  never-green entries and ahead of every green one;
+  never-green entries and ahead of every green one: they cannot
+  reach the head while 50 older never-green entries remain;
 - a registry key that does not start with ``q<number>_`` is a
   ValueError that names it;
 - retired slots (q380, q453) are absent from the registry but their
@@ -25,31 +29,35 @@ from watermark_remove_spark.queries._registry import (
 )
 
 
-def test_head_50_is_oldest_never_green():
+def test_head_50_is_oldest_unchecked_block():
     from watermark_remove_spark.queries import ORACLES, QUERIES
 
     names = list(QUERIES)
     head = [_qnum(n) for n in names[:50]]
     assert head == [63, 85, 87, 88, *range(101, 147)]
-    # ORACLES iterates in the same order (the driver zips them)
+    # ORACLES iterates in the same order (the harness zips them)
     assert list(ORACLES) == names
 
 
-def test_never_green_then_green_each_ascending():
+def test_tail_follows_drain_order():
     from watermark_remove_spark.queries import QUERIES
 
     keys = [(_qnum(n) in DRIVER_GREEN, _qnum(n)) for n in QUERIES]
-    assert keys == sorted(keys)
+    tail = keys[50:]
+    # never-green entries by number, then green entries by number
+    assert tail == sorted(tail) and keys[:50] == sorted(keys[:50])
+    assert max(keys[:50]) < min(tail)
     # 146 green numbers, q453 among them (retired from the registry)
     assert len(DRIVER_GREEN) == 146
     assert sum(green for green, _ in keys) == 145
 
 
-def test_new_entries_sort_behind_older_never_green():
-    names = ["q999_new", "q51_x", "q465_new", "q63_x", "q1_x", "q413_x"]
-    assert _registry_order(names) == [
-        "q63_x", "q413_x", "q465_new", "q999_new", "q1_x", "q51_x",
-    ]
+def test_new_entries_cannot_reach_the_head():
+    older = [f"q{i:d}_x" for i in range(101, 151)]
+    names = ["q999_new", "q51_x", "q465_new", *older, "q1_x"]
+    order = _registry_order(names)
+    assert order[:50] == older
+    assert order[50:] == ["q465_new", "q999_new", "q1_x", "q51_x"]
 
 
 def test_non_query_key_is_a_named_value_error():

@@ -71,8 +71,9 @@ def main():
             print(f"{name}: rows-only ({len(srows)} rows) OK")
             continue
         try:
-            # through Arrow, as the driver fetches: a HUGEINT column
-            # arrives as Decimal (fetchall() would hand back a plain int)
+            # through Arrow, as the correctness harness fetches: a
+            # HUGEINT column arrives as Decimal (fetchall() would hand
+            # back a plain int)
             tbl = con.execute(sql).arrow()
             dcols = tbl.column_names
             drows = list(zip(*(c.to_pylist() for c in tbl.columns)))

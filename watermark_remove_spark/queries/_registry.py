@@ -1,5 +1,5 @@
 """Registry: QUERIES and ORACLES, derived from the block modules in
-the driver's check order.
+the order the correctness harness checks them.
 
 Every top-level ``q<N>_<name>`` callable of the catalog is a query,
 unless RETIRED.  Its oracle is the constant ``ORACLE_Q<N>`` (N padded
@@ -29,16 +29,16 @@ def _qnum(name: str) -> int:
     return int(m.group(1))
 
 
-# Every query number the driver's correctness harness has hashed green
+# Every query number the correctness harness has hashed green
 # (CORRECTNESS_r01-r05): q1-q100 and q414-q464, except q63, q85, q87,
 # q88 and q416.
 DRIVER_GREEN = frozenset({*range(1, 101), *range(414, 465)} - {63, 85, 87, 88, 416})
 
 
-# REGISTRY ORDER IS THE DRIVER'S CHECK ORDER.  The driver hashes
-# exactly the first 50 entries each round, so the entries it has never
-# shown green come first, oldest (lowest number) first; the green ones
-# ride behind by number.  New queries are never-green and so sort
+# REGISTRY ORDER IS THE CORRECTNESS HARNESS'S CHECK ORDER.  The
+# harness hashes exactly the first 50 entries each run, so the entries
+# it has never shown green come first, oldest (lowest number) first;
+# the green ones ride behind by number.  New queries are never-green and so sort
 # ahead of every green entry, behind the older never-green ones.
 def _registry_order(names: list[str]) -> list[str]:
     return sorted(names, key=lambda n: (_qnum(n) in DRIVER_GREEN, _qnum(n)))
