@@ -34,8 +34,11 @@ BENCH_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "60000"))
 # checkpoint restarts), sized to the data volume: per-batch state-store
 # commit cost scales with partition count, so 32 partitions for ~15k
 # rows/trigger is mostly commit overhead (measured: 8 parts ~7.3k
-# pages/s vs 32 parts ~4k at this volume).  At 100 TB you size this to
-# the cluster (thousands); here to the bench volume.
+# pages/s vs 32 parts ~4k at this volume).  Each partition's commit
+# costs its checkpoint files times the process forks per file: without
+# libhadoop the local filesystem forks a chmod for every file it
+# creates (see session.py, which cuts the file count).  At 100 TB you
+# size this to the cluster (thousands); here to the bench volume.
 STREAM_PARTS = int(os.environ.get("SPARK_GRAFT_STREAM_PARTS", "8"))
 
 

@@ -19,31 +19,42 @@ from watermark_remove_spark.sources.catalog import ParquetCatalog, get_catalog
 from watermark_remove_spark.sources.pages import write_batch_files
 
 
-def test_lineage_listener_records_batches(spark, tmp_path):
+def test_lineage_listener_records_batches(spark, session_conf, tmp_path):
+    from watermark_remove_spark.session import ROCKSDB_PROVIDER
     from watermark_remove_spark.sources.pages import stream_pages_files
     from watermark_remove_spark.streaming.lineage import JsonlLineageListener
     from watermark_remove_spark.streaming.pipeline import run_stream_to_sink
     from watermark_remove_spark.streaming.sink import ParquetLedgerSink
 
     corpus = generate_corpus(PagesConfig(n_pages=120, n_domains=3, seed=5))
+    pages = corpus.pages
+    # a third file: one page a day before the earliest, so behind the watermark
+    late = pages.iloc[:1].assign(warc_ts=pages["warc_ts"].min() - pd.Timedelta(days=1))
     src = str(tmp_path / "src")
-    write_batch_files([corpus.pages.iloc[:60], corpus.pages.iloc[60:]], src)
+    write_batch_files([pages.iloc[:60], pages.iloc[60:], late], src)
+    n_rows = len(pages) + 1
 
     path = str(tmp_path / "lineage.jsonl")
     listener = JsonlLineageListener(path)
     spark.streams.addListener(listener)
     try:
         sink = ParquetLedgerSink(str(tmp_path / "out"))
-        stream = stream_pages_files(spark, src, 1).select("url", "warc_ts")
-        q = run_stream_to_sink(stream, sink, str(tmp_path / "ck"))
-        q.awaitTermination(120)
+        stream = (
+            stream_pages_files(spark, src, 1)
+            .withWatermark("warc_ts", "10 minutes")
+            .dropDuplicates(["url", "warc_ts"])
+            .select("url", "warc_ts")
+        )
+        with session_conf({"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}):
+            q = run_stream_to_sink(stream, sink, str(tmp_path / "ck"))
+            q.awaitTermination(120)
         # listener events are delivered asynchronously on the bus
         import time
 
         for _ in range(40):
             recs = [json.loads(l) for l in open(path)]
             progress = [r for r in recs if r["event"] == "progress"]
-            if sum(r["num_input_rows"] for r in progress) >= len(corpus.pages):
+            if sum(r["num_input_rows"] for r in progress) >= n_rows:
                 break
             time.sleep(0.5)
     finally:
@@ -53,7 +64,16 @@ def test_lineage_listener_records_batches(spark, tmp_path):
     events = {r["event"] for r in recs}
     assert "started" in events and "progress" in events
     progress = [r for r in recs if r["event"] == "progress"]
-    assert sum(r["num_input_rows"] for r in progress) == len(corpus.pages)
+    assert sum(r["num_input_rows"] for r in progress) == n_rows
+
+    ops = [op for r in progress for op in r["state_operators"]]
+    assert ops and all(op["commit_time_ms"] >= 0 for op in ops)
+    assert sum(op["rows_dropped_by_watermark"] for op in ops) == 1
+    for op in ops:
+        assert {
+            "rocksdbCommitFileSyncLatencyMs",
+            "rocksdbChangeLogWriterCommitLatencyMs",
+        } <= set(op["custom_metrics"])
 
 
 def test_quarantine_contract(spark):

@@ -68,6 +68,7 @@ def main() -> None:
         app_name=f"wrs-scale-{args.cpus}",
         master=args.master or f"local[{args.cpus}]",
         shuffle_partitions=args.shuffle_partitions or args.cpus,
+        streaming=True,
         extra_conf=extra_conf,
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -46,6 +46,12 @@ class JsonlLineageListener(StreamingQueryListener):
                     "rows_total": s.numRowsTotal,
                     "rows_updated": s.numRowsUpdated,
                     "memory_used_bytes": s.memoryUsedBytes,
+                    "commit_time_ms": s.commitTimeMs,
+                    "rows_dropped_by_watermark": s.numRowsDroppedByWatermark,
+                    # provider-specific; RocksDB's include
+                    # rocksdbCommitFileSyncLatencyMs and
+                    # rocksdbChangeLogWriterCommitLatencyMs
+                    "custom_metrics": dict(s.customMetrics or {}),
                 }
                 for s in (p.stateOperators or [])
             ],
