@@ -5,8 +5,9 @@ ONE JSON line:
    "queries": {name: sec, ...}, "sf": ..., "pages_per_sec": ...}
 
 The headline suite covers every operator family:
-- the streaming flagship (mask mine -> dedup -> UDF extract -> window
-  agg -> exactly-once sink) over a synthetic pages corpus, measured in
+- the streaming flagship (mask mine -> dedup -> mapInArrow extract with
+  masks shipped once per stream -> window agg -> exactly-once sink)
+  over a synthetic pages corpus, measured in
   pages/sec (north_star metric);
 - the relational/window/dedup/similarity batch queries from the driver
   contract at the bench scale factor.

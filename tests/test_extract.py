@@ -2,20 +2,27 @@
 
 The byte-exactness contract (BASELINE.json:input_hint): extracted
 clean_text per url is byte-identical to the reference (pandas oracle)
-extractor, for BOTH the pandas-UDF path and the pure-Catalyst path.
+extractor for the one engine form, ``clean_pages_udf_fast``.
 """
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
+import pandas as pd
 from pyspark.sql import functions as F
 
+from watermark_remove_spark.fixtures import PagesConfig, generate_corpus
 from watermark_remove_spark.spec import MaskConfig, domain_of, shingles, tokenize
 from watermark_remove_spark.oracle import oracle_extract, oracle_mine_masks
 from watermark_remove_spark.operators.extract import (
-    clean_pages_expr,
-    clean_pages_udf,
+    MASK_SCHEMA,
+    clean_pages_udf_fast,
     mine_masks,
 )
+from watermark_remove_spark.sources.pages import read_pages_batch, write_batch_files
+from watermark_remove_spark.streaming.pipeline import build_clean_stream
 from watermark_remove_spark.functions.shingles import (
     doc_shingles_expr,
     line_shingles_expr,
@@ -83,48 +90,111 @@ def test_masks_cover_templates_only(spark, corpus, pages_sdf):
     assert checked >= 3
 
 
-def test_clean_udf_byte_identical_to_oracle(spark, corpus, pages_sdf):
-    masks_oracle = oracle_mine_masks(corpus.pages, CFG)
-    golden = oracle_extract(corpus.pages, masks_oracle, CFG)
-    golden_map = {
-        (u, t): c for u, t, c in zip(golden["url"], golden["warc_ts"], golden["clean_text"])
+def _edge_pages(corpus) -> pd.DataFrame:
+    """Rows the generated corpus lacks, all on template lines of d04
+    (unversioned, so every one of its template lines is masked)."""
+    tmpl = corpus.domain_templates
+    d04 = "\n".join(tmpl.loc[tmpl["domain"] == "d04.example.com", "template_line"])
+    rows = {
+        "https://d04.example.com/edge/null": None,
+        "https://d04.example.com/edge/empty": "",
+        "https://d04.example.com/edge/blank": "\n \n" + d04 + "\n   \n\n  ",
+        "https://d04.example.com/edge/all-masked": d04,
+        "https://nomask.example.com/edge/1": d04,
+        "not a url": d04,
     }
+    return pd.DataFrame(
+        {
+            "url": list(rows),
+            "warc_ts": corpus.pages["warc_ts"].iloc[0],
+            "html": None,
+            "text": list(rows.values()),
+            "lang": "en",
+        }
+    )
 
-    masks = mine_masks(pages_sdf, CFG)
-    out = clean_pages_udf(pages_sdf, masks).select("url", "warc_ts", "clean_text").collect()
-    assert len(out) == len(corpus.pages)
-    for r in out:
-        want = golden_map[(r.url, r.warc_ts.replace(tzinfo=None) if r.warc_ts.tzinfo else r.warc_ts)]
-        assert r.clean_text.encode("utf-8") == want.encode("utf-8"), r.url
 
+def test_clean_udf_byte_identical_to_oracle(spark, corpus, pages_sdf):
+    """The one extraction form == oracle_extract byte for byte, on the
+    corpus plus null/empty/blank/all-masked/no-mask/null-domain rows,
+    under the mined masks, with one domain's mask row missing, and
+    with an empty mask table."""
+    edges = _edge_pages(corpus)
+    pages = pages_sdf.unionByName(spark.createDataFrame(edges, pages_sdf.schema))
+    all_pages = pd.concat([corpus.pages, edges], ignore_index=True)
+    has_text = all_pages["text"].notna()
+    mined = mine_masks(pages_sdf, CFG)
+    golden_masks = oracle_mine_masks(corpus.pages, CFG)
 
-def test_clean_fast_udf_byte_identical(spark, corpus, pages_sdf):
-    """Production mapInPandas path == spec-direct pandas UDF path,
-    byte for byte (including null/empty/maskless rows)."""
-    from watermark_remove_spark.operators.extract import clean_pages_udf_fast
+    variants = {
+        "mined": (mined, golden_masks),
+        "d04 row dropped": (
+            mined.where(F.col("domain") != "d04.example.com"),
+            {d: m for d, m in golden_masks.items() if d != "d04.example.com"},
+        ),
+        "empty": (spark.createDataFrame([], MASK_SCHEMA), {}),
+    }
+    for label, (masks, oracle_masks) in variants.items():
+        golden = oracle_extract(all_pages[has_text], oracle_masks, CFG)
+        want = Counter(
+            (u, t.to_pydatetime(), c.encode("utf-8"))
+            for u, t, c in zip(golden["url"], golden["warc_ts"], golden["clean_text"])
+        )
+        want.update((u, t.to_pydatetime(), None) for u, t in zip(
+            all_pages.loc[~has_text, "url"], all_pages.loc[~has_text, "warc_ts"]))
+        out = clean_pages_udf_fast(pages, masks).select("url", "warc_ts", "domain", "clean_text")
+        rows = out.collect()
+        got = Counter(
+            (r.url, r.warc_ts, None if r.clean_text is None else r.clean_text.encode("utf-8"))
+            for r in rows
+        )
+        assert got == want, label
+        by_url = {r.url: r for r in rows}
+        assert by_url["not a url"].domain is None
+        masked = label == "mined"
+        assert (by_url["https://d04.example.com/edge/all-masked"].clean_text == "") is masked
 
-    masks = mine_masks(pages_sdf, CFG)
-    slow = clean_pages_udf(pages_sdf, masks).select("url", "warc_ts", "clean_text")
-    fast = clean_pages_udf_fast(pages_sdf, masks).select("url", "warc_ts", "clean_text")
-    assert slow.exceptAll(fast).count() == 0
-    assert fast.exceptAll(slow).count() == 0
     # composes with downstream aggregation (the Catalyst-extraction
-    # failure mode that motivated mapInPandas)
-    total = fast.selectExpr("sum(length(clean_text)) as t").collect()[0].t
-    assert total > 0
+    # failure mode that motivated a map node over a scalar UDF)
+    total = clean_pages_udf_fast(pages, mined).selectExpr("sum(length(clean_text)) as t")
+    assert total.collect()[0].t > 0
 
 
-def test_clean_expr_equals_clean_udf(spark, pages_sdf):
-    masks = mine_masks(pages_sdf, CFG)
-    a = clean_pages_udf(pages_sdf, masks).select("url", "warc_ts", "clean_text")
-    b = clean_pages_expr(pages_sdf, masks).select("url", "warc_ts", "clean_text")
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+def _plan_nodes(plan: str) -> Counter:
+    return Counter(re.findall(r"\b(MapInArrow|MapInPandas|BroadcastExchange|BroadcastHashJoin)\b", plan))
+
+
+def test_extraction_plan_is_one_arrow_map_without_join(spark, tmp_path):
+    """The masks reach the kernel as a broadcast variable, never as a
+    join: the batch plan and a started clean stream's executed plan
+    each hold exactly one MapInArrow and no broadcast exchange, hash
+    join or pandas map."""
+    corpus = generate_corpus(PagesConfig(n_pages=120, n_domains=3, seed=5))
+    src = str(tmp_path / "src")
+    write_batch_files([corpus.pages.iloc[:60], corpus.pages.iloc[60:]], src)
+    masks = mine_masks(read_pages_batch(spark, src))
+    want = Counter({"MapInArrow": 1})
+
+    batch = clean_pages_udf_fast(read_pages_batch(spark, src), masks)
+    assert _plan_nodes(batch._jdf.queryExecution().executedPlan().toString()) == want
+
+    stream = build_clean_stream(spark, src, masks)
+    q = (
+        stream.writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+        assert _plan_nodes(q._jsq.explainInternal(False)) == want
+    finally:
+        q.stop()
 
 
 def test_templates_removed_content_kept(spark, corpus, pages_sdf):
     masks = mine_masks(pages_sdf, CFG)
-    out = clean_pages_expr(pages_sdf, masks)
+    out = clean_pages_udf_fast(pages_sdf, masks)
     # no header/footer/overlay marker survives for big stable domains
     big = out.where(F.col("domain") == "d04.example.com")  # unversioned, non-mega
     survivors = big.where(

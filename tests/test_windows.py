@@ -12,7 +12,7 @@ from watermark_remove_spark.oracle import (
     oracle_sliding_lang_windows,
     oracle_tumbling_lang_windows,
 )
-from watermark_remove_spark.operators.extract import clean_pages_expr, mine_masks, with_domain
+from watermark_remove_spark.operators.extract import clean_pages_udf_fast, mine_masks, with_domain
 from watermark_remove_spark.operators.windows import (
     domain_session_agg,
     lang_domain_rollup,
@@ -34,7 +34,7 @@ def _to_records(df, ts_cols):
 
 def _cleaned(spark, corpus, pages_sdf):
     masks = mine_masks(pages_sdf)
-    eng = clean_pages_expr(pages_sdf, masks).dropDuplicates(["url", "warc_ts"])
+    eng = clean_pages_udf_fast(pages_sdf, masks).dropDuplicates(["url", "warc_ts"])
     golden_masks = oracle_mine_masks(corpus.pages)
     golden = oracle_extract(corpus.pages, golden_masks)
     return eng, golden

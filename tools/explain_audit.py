@@ -829,12 +829,9 @@ def main() -> None:
     check("q62_edge_derivation", plan, forbid_node=("CartesianProduct",))
     print("audited q62_edge_derivation")
 
-    # extraction pipeline: html must not be read; mask join broadcast
-    from watermark_remove_spark.operators.extract import (
-        clean_pages_expr,
-        clean_pages_udf_fast,
-        mine_masks,
-    )
+    # extraction pipeline: html must not be read; the masks reach the
+    # one Arrow map as a broadcast variable, never through a join
+    from watermark_remove_spark.operators.extract import clean_pages_udf_fast, mine_masks
     from watermark_remove_spark.fixtures import PagesConfig, generate_corpus
     from watermark_remove_spark.sources.pages import write_batch_files
     import tempfile
@@ -844,14 +841,13 @@ def main() -> None:
     write_batch_files([corpus.pages], tmp)
     pages = spark.read.parquet(tmp)
     masks = mine_masks(pages)
-    for label, df in {
-        "extract_expr": clean_pages_expr(pages, masks).select("url", "clean_text"),
-        "extract_fast": clean_pages_udf_fast(pages, masks).select("url", "clean_text"),
-        "mine_masks": masks,
-    }.items():
-        plan = plan_of(df)
-        check(label, plan, broadcast=(label != "mine_masks"), forbid_read=("html",),
-              codegen=True)
+    no_join = ("BroadcastExchange", "BroadcastHashJoin", "MapInPandas")
+    for label, df, kw in (
+        ("extract_fast", clean_pages_udf_fast(pages, masks).select("url", "clean_text"),
+         dict(require_node=("MapInArrow",), forbid_node=no_join)),
+        ("mine_masks", masks, {}),
+    ):
+        check(label, plan_of(df), forbid_read=("html",), codegen=True, **kw)
         print(f"audited {label}")
 
     spark.stop()

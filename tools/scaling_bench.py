@@ -27,8 +27,8 @@ cluster sizes:
   parquet files per trigger -> scan parallelism comparable to Iceberg
   split planning at both levels).
 
-Workload: the full streaming flagship (broadcast mask join ->
-JVM shingle hashing -> Arrow mapInPandas membership extraction ->
+Workload: the full streaming flagship (JVM shingle hashing ->
+mapInArrow membership extraction, masks shipped once per stream ->
 streaming dropDuplicates -> tumbling window agg -> exactly-once
 ledger sink) over heavy (~3 KB text) Common-Crawl-shaped pages.
 
@@ -247,8 +247,8 @@ def main() -> None:
         f.write(f"""# BENCH/BASELINE.md — scaling-efficiency evidence (N vs 4N executors)
 
 Protocol (see tools/scaling_bench.py docstring): identical streaming
-flagship job — broadcast mask join, JVM shingle hashing, Arrow
-mapInPandas membership extraction, streaming dropDuplicates on
+flagship job — JVM shingle hashing, mapInArrow membership
+extraction with masks shipped once per stream, dropDuplicates on
 (url, warc_ts), tumbling window agg per lang, exactly-once ledger
 sink — on deterministic synthetic input ({n_pages} pages of ~3 KB
 text this invocation; page COUNT has varied across the recorded

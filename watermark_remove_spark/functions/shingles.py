@@ -3,8 +3,10 @@
 Everything here compiles to built-in JVM expressions — ``split``,
 ``filter``, ``transform``, ``sequence``, ``slice``, ``array_join``,
 ``xxhash64`` — so shingling of the full 100 TB corpus runs inside
-whole-stage codegen with zero Python.  The Python spec functions are
-only used in the pandas-UDF *application* path and the oracle.
+whole-stage codegen with zero Python.  Mask *application* is not
+here: it is the ``mapInArrow`` kernel of ``operators/extract.py``, with
+the masks shipped once per stream.  The Python spec functions are the
+oracle only.
 
 Parity with ``spec.tokenize`` / ``spec.shingles`` is asserted in
 ``tests/test_spec.py`` and ``tests/test_extract.py``.
@@ -25,18 +27,26 @@ def tokens_expr(line: Column) -> Column:
 def kgram_windows_expr(toks: Column, k: int) -> Column:
     """array<string> of space-joined k-gram windows over a token array
     (the ONE window builder: shingling and the rolling fingerprints all
-    share it).  n==0 -> []; n<=k -> the whole line as one gram."""
-    n = F.size(toks)
-    return (
-        F.when(n == 0, F.array().cast("array<string>"))
-        .when(n <= k, F.array(F.array_join(toks, " ")))
-        .otherwise(
-            F.transform(
-                F.sequence(F.lit(1), n - F.lit(k - 1)),
-                lambda i: F.array_join(F.slice(toks, i, k), " "),
+    share it).  n==0 -> []; n<=k -> the whole line as one gram.
+
+    ``toks`` is bound once through a transform over a one-element array
+    (Catalyst has no let): used directly, a token expression would be
+    re-split and re-filtered for every window of the line."""
+
+    def windows(t: Column) -> Column:
+        n = F.size(t)
+        return (
+            F.when(n == 0, F.array().cast("array<string>"))
+            .when(n <= k, F.array(F.array_join(t, " ")))
+            .otherwise(
+                F.transform(
+                    F.sequence(F.lit(1), n - F.lit(k - 1)),
+                    lambda i: F.array_join(F.slice(t, i, k), " "),
+                )
             )
         )
-    )
+
+    return F.transform(F.array(toks), windows)[0]
 
 
 def line_shingles_expr(line: Column, k: int = DEFAULT_SHINGLE_K) -> Column:
@@ -60,25 +70,6 @@ def doc_distinct_shingle_hashes_expr(text: Column, k: int = DEFAULT_SHINGLE_K) -
 
 
 def domain_expr(url: Column) -> Column:
-    """Host of the url — spec.domain_of (O-12)."""
-    return F.parse_url(url, F.lit("HOST"))
-
-
-def clean_text_expr(text: Column, mask: Column, k: int = DEFAULT_SHINGLE_K) -> Column:
-    """Pure-Catalyst mask application — the zero-Python fast path.
-
-    A line is dropped iff it has >=1 shingle and every shingle hash is
-    in ``mask`` (array<long>, assumed sorted ascending so the JVM can
-    binary-search via array_contains semantics).  Spec: spec.clean_text.
-    """
-    lines = F.split(text, "\n", -1)
-    safe_mask = F.coalesce(mask, F.array().cast("array<bigint>"))
-
-    def keep(ln: Column) -> Column:
-        hs = F.transform(line_shingles_expr(ln, k), lambda s: F.xxhash64(s))
-        fully_masked = (F.size(hs) > 0) & (
-            F.size(F.array_except(hs, safe_mask)) == 0
-        )
-        return ~fully_masked
-
-    return F.array_join(F.filter(lines, keep), "\n")
+    """Host of the url — spec.domain_of (O-12).  An unparseable url
+    yields a null domain (never masked) instead of failing the query."""
+    return F.try_parse_url(url, F.lit("HOST"))

@@ -14,26 +14,30 @@ Scale design
   one hash-aggregate ``groupBy(domain, shingle_hash).count()``.  Since
   shingle hash-sets are distinct per doc, ``count(*)`` IS the document
   frequency — no count_distinct(url) shuffle of url strings needed.
-- **Masks are small** (boilerplate per domain is bounded) → the
-  mask⨝pages join is a broadcast join (O-16), no shuffle of the 100 TB
-  pages side.
-- **Application** has two interchangeable, parity-tested forms:
-  ``clean_pages_expr`` (pure Catalyst, zero Python — the fast path) and
-  ``clean_pages_udf`` (vectorized Arrow pandas UDF — the form mandated
-  by BASELINE.json:north_star).  Byte-identical outputs.
+- **Masks are small** (boilerplate per domain is bounded) → the mask
+  table is collected once when the extraction plan is built and
+  shipped to executors as one broadcast variable (O-16): no join, no
+  exchange of the 100 TB pages side, and a stream pays it once, not
+  per micro-batch.
+- **Application** is one form, ``clean_pages_udf_fast``: JVM shingle
+  hashing, then one vectorized ``mapInArrow`` kernel (no per-row
+  Python) that tests every (domain, hash) of an Arrow batch at once.
+  ``spec.clean_text`` / ``oracle.oracle_extract`` are the byte-exact
+  reference.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import StringType
 
-from ..spec import DEFAULT_SHINGLE_K, MaskConfig, clean_text
+from ..spec import DEFAULT_SHINGLE_K, MaskConfig
 from ..functions.shingles import (
-    clean_text_expr,
     doc_distinct_shingle_hashes_expr,
     domain_expr,
+    line_shingles_expr,
 )
 
 MASK_SCHEMA = "domain string, mask array<bigint>"
@@ -74,51 +78,73 @@ def mine_masks(pages: DataFrame, cfg: MaskConfig | None = None) -> DataFrame:
     )
 
 
-def join_masks(pages: DataFrame, masks: DataFrame) -> DataFrame:
-    """Broadcast-join the small mask table onto the big pages side."""
-    p = with_domain(pages)
-    return p.join(F.broadcast(masks), "domain", "left")
+def _mask_index(masks: DataFrame) -> tuple[dict[str, int], np.ndarray, np.ndarray]:
+    """Collect the mask table once into what the kernel tests against:
+    domain -> id, the sorted unique mask hashes, and the sorted exact
+    keys ``domain_id * n_unique + rank``.  Null domains and empty masks
+    never match, as in the left join this replaces."""
+    rows = [r for r in masks.select("domain", "mask").collect() if r.domain is not None and r.mask]
+    ids: dict[str, int] = {}
+    for r in rows:
+        ids.setdefault(r.domain, len(ids))
+    if not rows:
+        return ids, np.empty(0, np.int64), np.empty(0, np.int64)
+    dom = np.concatenate([np.full(len(r.mask), ids[r.domain], np.int64) for r in rows])
+    uniq, rank = np.unique(np.concatenate([np.asarray(r.mask, np.int64) for r in rows]),
+                           return_inverse=True)
+    return ids, uniq, np.unique(dom * len(uniq) + rank)
 
 
-def make_clean_text_udf(k: int = DEFAULT_SHINGLE_K):
-    """The mandated vectorized Arrow pandas UDF (north_star: 'inside a
-    vectorized pandas/Arrow UDF ... no per-row Python').  Arrow batches
-    of (text, mask) come in; the kernel applies the SPEC; per-batch the
-    domain mask is usually one of a handful of values, so the frozenset
-    conversion is cached across rows."""
-
-    @F.pandas_udf(StringType())
-    def extract_clean_text(text: pd.Series, mask: pd.Series) -> pd.Series:
-        cache: dict[int, frozenset[int]] = {}
-
-        def mask_set(m) -> frozenset[int]:
-            if m is None:
-                return frozenset()
-            key = id(m)
-            got = cache.get(key)
-            if got is None:
-                got = frozenset(int(x) for x in m)
-                cache[key] = got
-            return got
-
-        return pd.Series(
-            [
-                None if t is None else clean_text(t, mask_set(m), k)
-                for t, m in zip(text, mask)
-            ],
-            dtype=object,
-        )
-
-    return extract_clean_text
+def _children(lists: pa.Array) -> tuple[pa.Array, np.ndarray]:
+    """Child values of a list array and the parent row of each.  Both
+    come from the raw offsets, so they stay aligned even if a null slot
+    spans values (``pc.list_flatten`` would skip those)."""
+    if not len(lists):  # an empty child can arrive without an offsets buffer
+        return pa.array([], lists.type.value_type), np.empty(0, np.int64)
+    off = lists.offsets
+    first, last = off[0].as_py(), off[-1].as_py()
+    return lists.values.slice(first, last - first), pc.list_parent_indices(lists).to_numpy()
 
 
-def clean_pages_udf(pages: DataFrame, masks: DataFrame, k: int = DEFAULT_SHINGLE_K) -> DataFrame:
-    """O-8 via pandas UDF (spec-direct reference form): adds
-    ``clean_text``.  The kernel re-hashes every shingle in Python —
-    byte-exactness anchor for tests, NOT the hot path (use
-    clean_pages_udf_fast)."""
-    udf = make_clean_text_udf(k)
-    return join_masks(pages, masks).withColumn("clean_text", udf(F.col("text"), F.col("mask")))
+def _in_sorted(sorted_arr: np.ndarray, x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(position of each x in sorted_arr, whether it is there)."""
+    pos = np.minimum(np.searchsorted(sorted_arr, x), len(sorted_arr) - 1)
+    return pos, sorted_arr[pos] == x
+
+
+def _clean_batch(batch: pa.RecordBatch, carry_cols, ids, uniq, keys) -> pa.RecordBatch:
+    """SPEC line masking (``spec.clean_text``) over one Arrow batch: a
+    line is dropped iff it has >=1 shingle and every shingle hash is in
+    its domain's mask.  Python loops only over the batch's distinct
+    domains; every per-line and per-hash step is one numpy/Arrow call."""
+    lines, lh = batch.column("__lines"), batch.column("__lh")
+    flat_lines, line_row = _children(lines)
+    line_lh, _ = _children(lh)
+    hashes, hash_line = _children(line_lh)
+    hashes = hashes.to_numpy()
+    n_hash = pc.list_value_length(line_lh).to_numpy()
+
+    enc = pc.dictionary_encode(batch.column("domain"))
+    dom_id = np.array([ids.get(d, -1) for d in enc.dictionary.to_pylist()] + [-1], np.int64)
+    hash_dom = dom_id[enc.indices.fill_null(len(enc.dictionary)).to_numpy()][line_row][hash_line]
+
+    hit = np.zeros(len(hashes), bool)
+    sel = hash_dom >= 0
+    if sel.any():
+        rank, known = _in_sorted(uniq, hashes[sel])
+        hit[sel] = known & _in_sorted(keys, hash_dom[sel] * len(uniq) + rank)[1]
+    masked = (n_hash > 0) & (np.bincount(hash_line[hit], minlength=len(n_hash)) == n_hash)
+
+    keep = ~masked
+    offsets = np.zeros(len(lines) + 1, np.int32)
+    np.cumsum(np.bincount(line_row[keep], minlength=len(lines)), out=offsets[1:])
+    kept = pa.ListArray.from_arrays(
+        pa.array(offsets), flat_lines.filter(pa.array(keep)), mask=lines.is_null()
+    )
+    clean = pc.binary_join(kept, "\n")
+    return pa.RecordBatch.from_arrays(
+        [batch.column(c) for c in carry_cols] + [clean], [*carry_cols, "clean_text"]
+    )
 
 
 def clean_pages_udf_fast(
@@ -127,81 +153,44 @@ def clean_pages_udf_fast(
     k: int = DEFAULT_SHINGLE_K,
     carry_cols: tuple[str, ...] = ("url", "warc_ts", "domain", "lang"),
 ) -> DataFrame:
-    """O-8 production path: JVM shingle hashing + numpy membership in
-    an Arrow ``mapInPandas`` node.  Byte-identical to clean_pages_udf /
-    the oracle (cross-tested).
+    """O-8: adds ``clean_text`` (byte-identical to ``spec.clean_text``
+    per page's domain mask) and keeps ``carry_cols``.
 
-    Why mapInPandas and not a scalar pandas UDF: a Python UDF whose
-    arguments contain higher-order-function lambdas cannot be extracted
-    out of a collapsed aggregate projection by Catalyst
-    (INTERNAL_ERROR: Cannot evaluate expression) — a map node sits in
-    the plan and composes with any downstream operator.  Bonus: the
-    fat __lines/__lh arrays never cross back from Python; only
-    clean_text does.
+    JVM shingle hashing, then one ``mapInArrow`` kernel with the masks
+    shipped once per stream: the mask table is collected here, when the
+    plan is built, and sent to executors as one broadcast variable, so
+    a streaming query pays no mask join, exchange or collect per
+    micro-batch.  Rows with a null domain or a domain without masks
+    keep every line.
+
+    A map node rather than a scalar UDF: a Python UDF whose arguments
+    contain higher-order-function lambdas cannot be extracted out of a
+    collapsed aggregate projection by Catalyst (INTERNAL_ERROR: Cannot
+    evaluate expression); a map node composes with any downstream
+    operator.  The fat __lines/__lh arrays never cross back from
+    Python; only clean_text does.
     """
-    import numpy as np
-
-    from ..functions.shingles import line_shingles_expr
-
-    joined = join_masks(pages, masks)
+    index = pages.sparkSession.sparkContext.broadcast(_mask_index(masks))
     lines = F.split(F.col("text"), "\n", -1)
     line_hashes = F.transform(
         lines,
         lambda ln: F.transform(line_shingles_expr(ln, k), lambda s: F.xxhash64(s)),
     )
-    stage = joined.select(
-        *carry_cols, lines.alias("__lines"), line_hashes.alias("__lh"), "mask"
+    staged = with_domain(pages).select(
+        *carry_cols,
+        *([] if "domain" in carry_cols else ["domain"]),
+        lines.alias("__lines"),
+        line_hashes.alias("__lh"),
     )
-    out_schema = ", ".join(
-        f"{c} {t}"
-        for c, t in [(c, dict(joined.dtypes)[c]) for c in carry_cols]
-    ) + ", clean_text string"
+    types = dict(staged.dtypes)
+    out_schema = ", ".join(f"{c} {types[c]}" for c in carry_cols) + ", clean_text string"
 
     def kernel(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = [None] * n
-            mask_cache: dict[int, np.ndarray] = {}
-            for i, (lns, lhs, mask) in enumerate(
-                zip(pdf["__lines"], pdf["__lh"], pdf["mask"])
-            ):
-                if lns is None:
-                    continue
-                if mask is None or len(mask) == 0:
-                    out[i] = "\n".join(lns)
-                    continue
-                key = id(mask)
-                m = mask_cache.get(key)
-                if m is None:
-                    m = np.asarray(mask, dtype=np.int64)
-                    mask_cache[key] = m
-                lens = np.fromiter((len(h) for h in lhs), dtype=np.int64, count=len(lhs))
-                total = int(lens.sum())
-                if total == 0:
-                    out[i] = "\n".join(lns)
-                    continue
-                flat = np.concatenate(
-                    [np.asarray(h, dtype=np.int64) for h in lhs if len(h)]
-                )
-                hits = np.isin(flat, m)
-                nz = lens > 0
-                offsets = np.zeros(len(lhs), dtype=np.int64)
-                np.cumsum(lens[:-1], out=offsets[1:])
-                allhit = np.zeros(len(lhs), dtype=bool)
-                allhit[nz] = np.minimum.reduceat(hits, offsets[nz]).astype(bool)
-                masked = nz & allhit
-                out[i] = "\n".join(ln for ln, dead in zip(lns, masked) if not dead)
-            res = pdf[list(carry_cols)].copy()
-            res["clean_text"] = out
-            yield res
+        ids, uniq, keys = index.value
+        for batch in batches:
+            yield _clean_batch(batch, carry_cols, ids, uniq, keys)
 
-    return stage.mapInPandas(kernel, out_schema)
-
-
-def clean_pages_expr(pages: DataFrame, masks: DataFrame, k: int = DEFAULT_SHINGLE_K) -> DataFrame:
-    """O-8 via pure Catalyst expressions: zero Python in the hot path."""
-    joined = join_masks(pages, masks)
-    return joined.withColumn("clean_text", clean_text_expr(F.col("text"), F.col("mask"), k))
+    return staged.mapInArrow(kernel, out_schema)
 
 
 def quarantine_split(cleaned: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -92,7 +92,7 @@ def doc_shingle_hash_set(text: str, k: int = DEFAULT_SHINGLE_K) -> set[int]:
 
 
 def domain_of(url: str) -> str:
-    """Host part of an http(s) URL — matches ``F.parse_url(url, 'HOST')``
+    """Host part of an http(s) URL — matches ``F.try_parse_url(url, 'HOST')``
     for the well-formed ``https://host/path`` URLs of the data model."""
     rest = url.split("://", 1)[-1]
     host = rest.split("/", 1)[0]

@@ -3,7 +3,7 @@
   rate-limited / file micro-batch source (O-2)
     -> withWatermark('warc_ts', Δ)                 (O-24)
     -> dropDuplicates(['url','warc_ts'])           (O-25, state-backed)
-    -> broadcast mask join + pandas-UDF extraction (O-8/O-10/O-16)
+    -> mapInArrow extraction, masks shipped once per stream (O-8/O-10/O-16)
     -> [branch A] cleaned rows     -> exactly-once sink (O-26/O-27)
     -> [branch B] windowed agg     -> exactly-once sink (append mode)
 
@@ -34,7 +34,8 @@ def build_clean_stream(
     tag_errors: bool = False,
 ) -> DataFrame:
     """source -> clean -> watermark -> dedup; masks is a static (batch)
-    DataFrame broadcast-joined onto each micro-batch.
+    DataFrame, collected once here and shipped to the mapInArrow kernel
+    once per stream (no per-micro-batch join).
 
     ``decode_html=True`` is the production input shape: text is decoded
     from the raw ``html:binary`` column in-stream.  ``tag_errors=True``
