@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from watermark_remove_spark.fixtures import PagesConfig, generate_corpus
 from watermark_remove_spark.spec import MaskConfig, domain_of, shingles, tokenize
+from watermark_remove_spark.spec import clean_text as spec_clean_text
 from watermark_remove_spark.oracle import oracle_extract, oracle_mine_masks
 from watermark_remove_spark.operators.extract import (
     MASK_SCHEMA,
@@ -154,10 +155,25 @@ def test_clean_udf_byte_identical_to_oracle(spark, corpus, pages_sdf):
         masked = label == "mined"
         assert (by_url["https://d04.example.com/edge/all-masked"].clean_text == "") is masked
 
+
+def test_clean_fast_udf_byte_identical(spark, corpus, pages_sdf):
+    """Production mapInArrow path == spec.clean_text applied row by row
+    under the engine's own mined masks, byte for byte."""
+    masks = mine_masks(pages_sdf, CFG)
+    by_domain = {r.domain: frozenset(r.mask) for r in masks.collect()}
+    fast = clean_pages_udf_fast(pages_sdf, masks).select("url", "warc_ts", "clean_text")
+    got = Counter(
+        (r.url, r.warc_ts, r.clean_text.encode("utf-8")) for r in fast.collect()
+    )
+    want = Counter(
+        (u, t.to_pydatetime(), spec_clean_text(x, by_domain.get(domain_of(u), frozenset())).encode("utf-8"))
+        for u, t, x in zip(corpus.pages["url"], corpus.pages["warc_ts"], corpus.pages["text"])
+    )
+    assert got == want
     # composes with downstream aggregation (the Catalyst-extraction
     # failure mode that motivated a map node over a scalar UDF)
-    total = clean_pages_udf_fast(pages, mined).selectExpr("sum(length(clean_text)) as t")
-    assert total.collect()[0].t > 0
+    total = fast.selectExpr("sum(length(clean_text)) as t").collect()[0].t
+    assert total > 0
 
 
 def _plan_nodes(plan: str) -> Counter:

@@ -34,6 +34,21 @@ EVENTS_DDL = (
 )
 
 
+_PARQUET_KW = {"index": False, "coerce_timestamps": "us", "allow_truncated_timestamps": True}
+
+
+def _write_after(frame: pd.DataFrame, path: str, prev_ms: int) -> int:
+    """Write ``frame`` to ``path`` with an mtime at least 1 ms after
+    ``prev_ms``; return that mtime in ms.  The file stream source
+    orders files by modification time (ms), and files written in one
+    filesystem timestamp tick tie — their order, and so batch k = file
+    k, would then depend on directory listing order."""
+    frame.to_parquet(path, **_PARQUET_KW)
+    ms = max(os.stat(path).st_mtime_ns // 1_000_000, prev_ms + 1)
+    os.utime(path, ns=(ms * 1_000_000, ms * 1_000_000))
+    return ms
+
+
 def write_ordered_batches(pages: pd.DataFrame, out_dir: str, n_files: int) -> list[str]:
     """Split the corpus into n ordered parquet files, preserving row
     order (arrival order).  File k = micro-batch k under
@@ -42,13 +57,13 @@ def write_ordered_batches(pages: pd.DataFrame, out_dir: str, n_files: int) -> li
     paths = []
     n = len(pages)
     per = (n + n_files - 1) // n_files
-    kw = {"index": False, "coerce_timestamps": "us", "allow_truncated_timestamps": True}
+    ms = 0
     for i in range(n_files):
         chunk = pages.iloc[i * per : (i + 1) * per]
         if chunk.empty:
             break
         p = os.path.join(out_dir, f"batch-{i:05d}.parquet")
-        chunk.to_parquet(p, **kw)
+        ms = _write_after(chunk, p, ms)
         paths.append(p)
     return paths
 
@@ -70,19 +85,19 @@ def write_batch_files(
     batches to an already-streamed directory (checkpoint-resume
     fixtures) without colliding with the existing batch files."""
     os.makedirs(out_dir, exist_ok=True)
-    kw = {"index": False, "coerce_timestamps": "us", "allow_truncated_timestamps": True}
     paths = []
+    ms = 0
     for i, b in enumerate(batches, start=start_index):
         if subfiles == 1:
             p = os.path.join(out_dir, f"batch-{i:05d}.parquet")
-            b.to_parquet(p, **kw)
+            ms = _write_after(b, p, ms)
             paths.append(p)
         else:
             per = (len(b) + subfiles - 1) // subfiles
             for j in range(subfiles):
                 chunk = b.iloc[j * per : (j + 1) * per]
                 p = os.path.join(out_dir, f"batch-{i:05d}-{j:03d}.parquet")
-                chunk.to_parquet(p, **kw)
+                ms = _write_after(chunk, p, ms)
                 paths.append(p)
     return paths
 
